@@ -149,6 +149,28 @@ def cast_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
     return df.select(*cols)
 
 
+def local_frame(
+    spark: SparkSession, rows: list, schema: T.StructType | str
+) -> DataFrame:
+    """Driver-side rows as a ``LocalRelation`` (the one place this module
+    turns Python rows into a DataFrame). The rows travel to the JVM as one
+    Arrow batch, so the plan holds the data as constants: no pickled
+    Python RDD, no Python worker task, and the optimizer folds
+    projections over it on the driver (``collect()`` of a hash over a few
+    keys runs no job) and prunes an empty one away entirely.
+    ``spark.createDataFrame(<list>)`` would instead plan a ``LogicalRDD``
+    whose every scan starts Python workers, even for zero rows."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
+
+
 META_LSN = "_lsn"  # row version: max LSN that produced this row
 META_DEL = "_del"  # delete tombstone marker
 
@@ -596,7 +618,7 @@ class ManifestParquetTable(LakeTable):
         guards writes from now on; run a one-off `read().filter(~expr)`
         audit if the history must be certified too."""
         # fail fast on an unparsable expression, driver-side
-        self.spark.createDataFrame([], self.schema()).filter(F.expr(expr))
+        local_frame(self.spark, [], self.schema()).filter(F.expr(expr))
         m = self._manifest()
         nxt = self._next_manifest(m)
         nxt.setdefault("constraints", {})[name] = expr
@@ -724,9 +746,7 @@ class ManifestParquetTable(LakeTable):
         if len(names) <= 1000:
             dvt = dvt.filter(F.col("_dv_file").isin(names))
         else:
-            nm = self.spark.createDataFrame(
-                [(n,) for n in names], "_dv_file string"
-            )
+            nm = local_frame(self.spark, [(n,) for n in names], "_dv_file string")
             dvt = dvt.join(F.broadcast(nm), "_dv_file", "left_semi")
         total = sum(int(fe["dv"].get("rows", 0)) for fe in dv_entries)
         if total <= 4_000_000:
@@ -751,13 +771,17 @@ class ManifestParquetTable(LakeTable):
         is untouched, killed positions vanish at scan time, BEFORE any
         MoR key resolution stacks on top. Files without a DV (the whole
         table until the first DV delete) take the unchanged fast path —
-        no metadata columns, no join."""
+        no metadata columns, no join.
+
+        No files gives an empty ``LocalRelation`` (``local_frame``): the
+        optimizer prunes it out of any union or join it lands in, and it
+        never starts a task."""
         m = self._manifest()
         phys_target = self._physical_schema(target_schema)
         plain = [fe for fe in files if not fe.get("dv")]
         dv_entries = [fe for fe in files if fe.get("dv")]
         if not files:
-            df = self.spark.createDataFrame([], phys_target)
+            df = local_frame(self.spark, [], phys_target)
         else:
             parts = []
             for group, masked in ((plain, False), (dv_entries, True)):
@@ -812,7 +836,9 @@ class ManifestParquetTable(LakeTable):
         strictly increases per commit, so the argmax equals sequential
         delta application). The reduce shuffles only dirty-bucket rows;
         with a hash-partitioned reader it would be shuffle-free, and
-        ``materialize_deltas`` bounds how much ever stacks."""
+        ``materialize_deltas`` bounds how much ever stacks. When every
+        bucket holds a delta (the steady state of a busy MoR table) there
+        is no clean branch at all: the resolved stack is the whole read."""
         deltas = [fe for fe in files if fe.get("kind") == "delta"]
         if not deltas:
             return self._read_files(files, target_schema, with_meta=with_meta)
@@ -823,7 +849,6 @@ class ManifestParquetTable(LakeTable):
         # it as clean would skip delta application for the rows it shares.
         nb_cur = self.n_buckets()
         dirty_files, clean = _delta_zones(files, nb_cur).split(files, nb_cur)
-        out_clean = self._read_files(clean, target_schema, with_meta=True)
         by_seq: dict[int, list[dict]] = {}
         for fe in dirty_files:
             by_seq.setdefault(int(fe.get("seq", 0)), []).append(fe)
@@ -845,12 +870,16 @@ class ManifestParquetTable(LakeTable):
             F.coalesce(F.col(META_DEL), F.lit(False)).cast("int").alias("d"),
             F.col("_seq").alias("s"),
         )
-        resolved = (
+        out = (
             stacked.groupBy(self.key)
             .agg(F.max_by(F.struct(*[F.col(c) for c in payload]), order_key).alias("_r"))
             .select(self.key, *[F.col(f"_r.{c}").alias(c) for c in payload])
         )
-        out = out_clean.unionByName(resolved.select(*out_clean.columns))
+        if clean:
+            out_clean = self._read_files(clean, target_schema, with_meta=True)
+            out = out_clean.unionByName(out.select(*out_clean.columns))
+        else:
+            out = out.select(*self._physical_schema(target_schema).names)
         if with_meta:
             return out
         return out.filter(~F.coalesce(F.col(META_DEL), F.lit(False))).drop(
@@ -1575,14 +1604,15 @@ class ManifestParquetTable(LakeTable):
         their buckets and reads ONLY those buckets' files — O(|keys| x
         bucket-size) instead of O(table). The payoff of the hash-bucket
         layout for serving-style access (Iceberg bucket-transform partition
-        pruning equivalent)."""
+        pruning equivalent).
+
+        The bucket and bloom-probe hashes must match the executor-side
+        ``_bucket_expr`` (xxhash64 seed 42 over the UTF-8 key, pmod nb), so
+        they come from the same JVM function over the keys as a
+        ``LocalRelation`` (``local_frame``): the optimizer folds the hashes
+        into constants on the driver, and the probe runs no Spark job."""
         m = self._manifest()
-        nb = self.n_buckets()
-        # driver-side bucket computation must match the executor-side
-        # _bucket_expr: xxhash64 seed 42 over the UTF-8 key, pmod nb.
-        # Rather than reimplement xxhash64 in Python, compute via a tiny
-        # local DataFrame (exact same JVM function).
-        kdf = self.spark.createDataFrame([(k,) for k in keys], f"{self.key} string")
+        kdf = local_frame(self.spark, [(k,) for k in keys], f"{self.key} string")
         probe_rows = kdf.select(
             self._bucket_expr(self.key).alias("_b"),
             F.xxhash64(F.col(self.key)).alias("h1"),
@@ -2153,7 +2183,8 @@ class ManifestParquetTable(LakeTable):
             # partition column deliberately NOT underscore-prefixed:
             # Spark's file listing hides `_`-prefixed dirs, which would
             # make the staged `<col>=K` leaves invisible to the read-back
-            file_bucket = self.spark.createDataFrame(
+            file_bucket = local_frame(
+                self.spark,
                 [
                     (os.path.basename(fe["path"]), int(fe["bucket"]))
                     for fe in m["files"]
@@ -2162,9 +2193,14 @@ class ManifestParquetTable(LakeTable):
             )
             dv_df = dv_df.join(F.broadcast(file_bucket), "_dv_file")
             staging = os.path.join(self.path, f"_staging_dv-{nxt['snapshot_id']}")
+            # the commit records ONE DV file per bucket, so the write must
+            # not split a leaf: repartition puts each bucket in one task,
+            # and a session-level spark.sql.files.maxRecordsPerFile would
+            # still roll it into several part files — pin it off
             (
                 dv_df.repartition(F.col("dvb"))
                 .write.partitionBy("dvb")
+                .option("maxRecordsPerFile", 0)
                 .mode("overwrite")
                 .parquet(staging)
             )
@@ -2183,14 +2219,25 @@ class ManifestParquetTable(LakeTable):
                 .agg(F.count(F.lit(1)).alias("n"))
                 .collect()
             }
-            dv_rel_by_bucket: dict[int, str] = {}
-            for leaf in leaves:
-                b = int(leaf.split("=", 1)[1])
-                part_file = next(
+            part_files = {
+                leaf: [
                     fn
-                    for fn in sorted(self.fs.listdir(os.path.join(staging, leaf)))
+                    for fn in self.fs.listdir(os.path.join(staging, leaf))
                     if fn.endswith(".parquet")
+                ]
+                for leaf in leaves
+            }
+            split = {leaf: len(fns) for leaf, fns in part_files.items() if len(fns) != 1}
+            if split:
+                # renaming one file per leaf would drop the others' positions
+                # and bring their rows back to life
+                self.fs.rmtree(staging)
+                raise RuntimeError(
+                    f"DV write must leave one part file per bucket leaf, got {split}"
                 )
+            dv_rel_by_bucket: dict[int, str] = {}
+            for leaf, (part_file,) in part_files.items():
+                b = int(leaf.split("=", 1)[1])
                 rel = os.path.join("data", f"dv-{nxt['snapshot_id']}-b{b}.parquet")
                 self.fs.rename(
                     os.path.join(staging, leaf, part_file),
@@ -2877,7 +2924,8 @@ class ManifestParquetTable(LakeTable):
                 )
         if deep and files and not errors:
             default_nb = int(m.get("n_buckets") or 1)
-            fmap = self.spark.createDataFrame(
+            fmap = local_frame(
+                self.spark,
                 [
                     (
                         os.path.basename(fe["path"]),
@@ -3385,7 +3433,7 @@ class ManifestParquetTable(LakeTable):
             "bytes long, min_key string, max_key string, has_dels boolean, "
             "schema_version int, dv_rows long"
         )
-        return self.spark.createDataFrame(rows, schema)
+        return local_frame(self.spark, rows, schema)
 
     def snapshots_df(self) -> DataFrame:
         """Snapshot lineage as a DataFrame (the `.snapshots` metadata
@@ -3404,7 +3452,7 @@ class ManifestParquetTable(LakeTable):
             "seq long, snapshot_id string, parent string, "
             "committed_at string, n_files int"
         )
-        return self.spark.createDataFrame(rows, schema)
+        return local_frame(self.spark, rows, schema)
 
     # ---------- schema evolution ----------
     def evolve(self, new_schema: T.StructType) -> None:

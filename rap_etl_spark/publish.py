@@ -29,7 +29,7 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from rap_etl_spark.lake import ManifestParquetTable
@@ -75,6 +75,16 @@ def atomic_publish(out_dir: str, leaf: str, write, count) -> dict:
     return {"published": True, "rows": n, "dest": dest}
 
 
+def observed_rows(obs: Observation) -> int | None:
+    """Row count a ``count(1) AS rows`` observation collected during the
+    write it rode on, or None when it did not fire. The metrics reach the
+    observation through Spark's listener bus just after the write
+    returns; ``getRowOrEmpty`` waits up to 100 ms for them, where
+    ``Observation.get`` would block for ever on one that never fires."""
+    row = obs._jo.getRowOrEmpty()
+    return int(row.get().getLong(0)) if row.isDefined() else None
+
+
 def publish_changes(
     table: ManifestParquetTable,
     batch_id: int,
@@ -105,6 +115,10 @@ def publish_changes(
             "rows": 0,
             "error": str(e),
         }
+    # the leaf's row count comes from the write itself; the leaf is read
+    # back only when the observation did not fire
+    obs = Observation()
+    ev = ev.observe(obs, F.count(F.lit(1)).alias("rows"))
     if fmt == "binlog":
         # the .rapwal wire carries exactly (op, doc_id, lsn, tokens,
         # source) — binlog publishing is for the tokenized-sequence table
@@ -124,16 +138,20 @@ def publish_changes(
                 "overwrite"
             ).save(tmp)
 
-        def count(tmp):
-            return table.spark.read.format("rap-etl-binlog").load(tmp).count()
+        def read_back(tmp):
+            return table.spark.read.format("rap-etl-binlog").load(tmp)
 
     else:
 
         def write(tmp):
             ev.write.mode("overwrite").parquet(tmp)
 
-        def count(tmp):
-            return table.spark.read.parquet(tmp).count()
+        def read_back(tmp):
+            return table.spark.read.parquet(tmp)
+
+    def count(tmp):
+        n = observed_rows(obs)
+        return read_back(tmp).count() if n is None else n
 
     rep = atomic_publish(out_dir, f"batch={batch_id}", write, count)
     return {

@@ -446,3 +446,25 @@ def test_dv_redelete_counts_only_new_positions(spark, tmp_path):
     info2 = t.delete_where("doc_id = 'b'", mode="dv", batch_id=3)
     assert info2.rows_written == 1  # was 2: old masked position re-counted
     assert "b" not in state(t)
+
+
+def test_dv_leaf_stays_one_file_under_session_max_records(spark, tmp_path):
+    """A session-level ``spark.sql.files.maxRecordsPerFile`` must not split
+    a bucket's DV leaf: the commit keeps one DV file per bucket, so a split
+    leaf would lose every part file but one and bring those deleted rows
+    back."""
+    t = ManifestParquetTable.create(spark, str(tmp_path / "t"), SCHEMA, n_buckets=1)
+    t.append(
+        spark.createDataFrame(
+            [(f"k{i}", i, "s") for i in range(20)], "doc_id string, val long, src string"
+        ),
+        batch_id=0,
+        assume_unique=True,
+    )
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "1")
+    try:
+        info = t.delete_where("val % 2 = 0", mode="dv", batch_id=1)
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    assert info.rows_written == 10
+    assert sorted(state(t)) == sorted(f"k{i}" for i in range(1, 20, 2))

@@ -135,3 +135,17 @@ def test_fast_count_invariant_under_op_sequences(spark, tmp_path):
             elif op == "rebucket":
                 t.rebucket(8)
             assert t.fast_count() == t.read().count(), (mode, i, op)
+
+
+def test_files_df_and_snapshots_df_start_no_job(spark, tmp_path):
+    """Both metadata tables are driver-side ``LocalRelation``s: collecting
+    them runs no Spark job (a Python-RDD frame would run one per collect)."""
+    t = mk(spark, str(tmp_path / "t"))
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    files = t.files_df().collect()
+    snaps = t.snapshots_df().collect()
+    assert set(tracker.getJobIdsForGroup()) == before
+    assert sum(r["rows"] for r in files) == 40 and len(snaps) == 2
+    t.read().count()  # the probe itself sees jobs
+    assert set(tracker.getJobIdsForGroup()) != before

@@ -471,3 +471,85 @@ def test_row_lineage_single_exchange(spark, sf_oracle):
     assert count_exchanges(df) == 1
     cols = read_columns(df)
     assert "o_totalprice" not in cols and "o_comment" not in cols
+
+
+def _python_rdd_nodes(df) -> list[str]:
+    """Python-RDD frames (``spark.createDataFrame(<list>)``) plan as
+    ``LogicalRDD`` and execute as ``Scan ExistingRDD``: every run starts
+    Python worker tasks, whatever the row count."""
+    df.collect()
+    qe = df._jdf.queryExecution()
+    plans = qe.optimizedPlan().toString() + qe.executedPlan().toString()
+    return [n for n in ("LogicalRDD", "ExistingRDD") if n in plans]
+
+
+def test_mor_serve_path_has_no_python_rdd_frames(spark, tmp_path):
+    """On an MoR table where every bucket holds a delta (no clean branch),
+    reads, lookups (hit and miss) and the per-batch changefeed stay in the
+    JVM end to end, and the lookup's bucket probe folds on the driver
+    without a job."""
+    from pyspark.sql import types as T
+
+    from rap_etl_spark.lake import ManifestParquetTable
+
+    schema = T.StructType(
+        [T.StructField("doc_id", T.StringType()), T.StructField("v", T.LongType())]
+    )
+    t = ManifestParquetTable.create(
+        spark, str(tmp_path / "t"), schema, n_buckets=2, merge_mode="mor"
+    )
+    keys = [f"k{i}" for i in range(20)]
+    for b in (0, 1):
+        t.merge(
+            spark.range(20).select(
+                F.concat(F.lit("k"), F.col("id")).alias("doc_id"),
+                F.lit("U").alias("op"),
+                (F.col("id") + 100 * b).alias("lsn"),
+                (F.col("id") + b).alias("v"),
+            ),
+            batch_id=b,
+        )
+    assert set(t.delta_depth()) == {0, 1}
+    for df in (
+        t.read(),
+        t.lookup(keys[:3]),
+        t.lookup(["absent-key"]),
+        t.changes_for_batch(1),
+    ):
+        assert _python_rdd_nodes(df) == []
+    assert t.read().count() == 20 and t.lookup(["absent-key"]).count() == 0
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    hit = t.lookup(keys[:3])
+    assert set(tracker.getJobIdsForGroup()) == before
+    assert sorted(r["v"] for r in hit.collect()) == [1, 2, 3]
+    assert set(tracker.getJobIdsForGroup()) != before  # the probe sees jobs
+
+
+def test_lake_and_publish_build_frames_only_through_local_frame():
+    """``lake.local_frame`` is the one place the table layer turns Python
+    rows into a DataFrame; a ``createDataFrame`` call anywhere else in
+    ``lake.py`` or ``publish.py`` brings Python-RDD frames back."""
+    import ast
+    import inspect
+
+    from rap_etl_spark import lake, publish
+
+    def calls(node, fn=None):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "createDataFrame"
+        ):
+            yield fn
+        for child in ast.iter_child_nodes(node):
+            yield from calls(child, fn)
+
+    found = {
+        mod.__name__: list(calls(ast.parse(inspect.getsource(mod))))
+        for mod in (lake, publish)
+    }
+    assert found == {lake.__name__: ["local_frame"], publish.__name__: []}

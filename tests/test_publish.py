@@ -79,6 +79,34 @@ def test_publish_repairs_after_partial(spark, tmp_path):
     }
 
 
+def _leaf_rows(spark, path, fmt="parquet"):
+    """Rows a reader of a published leaf counts."""
+    return spark.read.format(
+        "rap-etl-binlog" if fmt == "binlog" else "parquet"
+    ).load(path).count()
+
+
+@pytest.mark.parametrize("observed", [True, False])
+def test_publish_rows_match_the_written_leaf(spark, tmp_path, monkeypatch, observed):
+    """``rows`` comes from an observation on the write, or from a read-back
+    of the leaf when the observation did not fire. Either way it equals
+    what a reader of the published leaf counts, for a normal batch and for
+    one whose changes are empty (a re-upsert of identical rows)."""
+    from rap_etl_spark import publish
+
+    if not observed:
+        monkeypatch.setattr(publish, "observed_rows", lambda obs: None)
+    t = mk(spark, str(tmp_path / "src"))
+    _drive(spark, t)
+    t.merge(ch(spark, [("a", "U", 3, 11, "w")]), batch_id=2)
+    assert t.changes_for_batch(2).count() == 0
+    log = str(tmp_path / "feed")
+    for b, n in ((1, 3), (2, 0)):  # batch 1: a upserted, c inserted, b deleted
+        rec = publish_changes(t, b, log)
+        assert rec["published"] and rec["rows"] == n
+        assert _leaf_rows(spark, f"{log}/batch={b}") == n
+
+
 def test_publish_unknown_batch_reported_not_raised(spark, tmp_path):
     t = mk(spark, str(tmp_path / "src"))
     rec = publish_changes(t, 9, str(tmp_path / "feed"))
@@ -103,6 +131,7 @@ def test_publish_binlog_roundtrip(spark, tmp_path):
     log = str(tmp_path / "feed")
     rec = publish_changes(t, 0, log, fmt="binlog")
     assert rec["published"] and rec["rows"] == 2
+    assert _leaf_rows(spark, f"{log}/batch=0", fmt="binlog") == 2
     d = ManifestParquetTable.create(
         spark, str(tmp_path / "dst"), DOCS_SCHEMA, n_buckets=4
     )
