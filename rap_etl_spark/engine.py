@@ -1,8 +1,9 @@
 """CdcEngine: the batch-apply lifecycle (SURVEY.md §3.2).
 
-Per batch: dedup/LWW-reduce the change events, (optionally) diff against the
-current table state, MERGE the delta into the lake table, record lineage
-(source offset range, rows applied, snapshot id) and throughput metrics.
+Per batch: dedup/LWW-reduce the change events to the max-LSN winner per
+key, stage that delta, MERGE it into the lake table with the merge hints the
+staging pass observed, record lineage (source offset range, rows applied,
+snapshot id) and throughput metrics.
 This is the shared tail of the reference (state-fetch → graph diff →
 batched publish, SURVEY.md §3.1) generalized to table snapshots.
 
@@ -33,8 +34,14 @@ from rap_etl_spark.lake import (
     cast_to_schema,
     check_evolution,
 )
-from rap_etl_spark.operators.cdc import KEY, diff_against_table, lww_latest, winner_probe
+from rap_etl_spark.operators.cdc import KEY, winner_probe
 from rap_etl_spark.schemas import PAYLOAD_COLS
+
+
+# winner sets up to this many keys are broadcast (a (string,long) row is
+# ~40B — 5M keys ≈ 200MB, within executor broadcast budgets); larger
+# batches fall back to a shuffled join
+BROADCAST_KEY_LIMIT = 5_000_000
 
 
 @dataclass
@@ -54,26 +61,7 @@ class CdcEngine:
     spark: SparkSession
     table: LakeTable
     lineage_dir: str | None = None
-    diff_first: bool = False  # skip-unchanged optimization (extra table read)
     count_input: bool = True  # per-batch input count (extra pass when no lineage)
-    # "join" aggregates only (key, max lsn) — fixed-width buffers, map-side
-    # combine — then semi-joins payloads back; AQE broadcasts the winner set
-    # when it is small and falls back to a shuffled hash join when not.
-    # Adaptively optimal at both sandbox and cluster scale (cdc.py notes).
-    lww_strategy: str = "join"
-    # winner sets up to this many keys are broadcast (a (string,long) row is
-    # ~40B — 5M keys ≈ 200MB, within executor broadcast budgets); larger
-    # batches fall back to a shuffled join
-    broadcast_key_limit: int = 5_000_000
-    # Stage the reduced winner delta as a small parquet before merging: the
-    # one expensive pass over the raw batch (the LWW semi-join) runs exactly
-    # once, and every downstream merge job (affected-bucket discovery, the
-    # old-vs-new reduction, the bucket write, row counting) re-reads the
-    # tiny staged delta instead of re-deriving it from the multi-GB scan —
-    # the standard CDC "staging table" move, and it also removes reliance on
-    # Spark cache retention under memory pressure.
-    stage_delta: bool = True
-    staging_dir: str | None = None
     # Multi-writer OCC: how many times to rebase-and-retry a merge whose
     # manifest pointer CAS lost to a concurrent committer (0 = surface
     # CommitConflictError immediately, the pre-round-2 behavior).
@@ -228,108 +216,82 @@ class CdcEngine:
         input_rows = -1
         winners = None
         try:
-            if self.lww_strategy == "join":
-                # Decide the winner-join strategy EXPLICITLY: Spark cannot
-                # know the winner cardinality at plan time, so without a
-                # hint AQE first materializes a full shuffle write of the
-                # multi-GB event batch before discovering the winner side is
-                # tiny — disk-bound and serial. One cheap count over the
-                # column-pruned (key, lsn) aggregate tells us up front.
-                winners = (
-                    events.groupBy(KEY).agg(F.max("lsn").alias("lsn")).persist()
-                )
-                _t = time.monotonic()
-                n_keys = winners.count()
-                _tlog("engine.winners_count", _t)
-                # long-key probe with exact re-check: see cdc.winner_probe
-                rhs = (
-                    F.broadcast(winners)
-                    if n_keys <= self.broadcast_key_limit
-                    else winners
-                )
-                latest = winner_probe(events, rhs, key=KEY)
-            else:
-                latest = lww_latest(events, strategy=self.lww_strategy)
+            # Decide the winner-join strategy EXPLICITLY: Spark cannot know
+            # the winner cardinality at plan time, so without a hint AQE
+            # first materializes a full shuffle write of the multi-GB event
+            # batch before discovering the winner side is tiny — disk-bound
+            # and serial. One cheap count over the column-pruned (key, lsn)
+            # aggregate tells us up front.
+            winners = (
+                events.groupBy(KEY).agg(F.max("lsn").alias("lsn")).persist()
+            )
+            _t = time.monotonic()
+            n_keys = winners.count()
+            _tlog("engine.winners_count", _t)
+            # long-key probe with exact re-check: see cdc.winner_probe
+            rhs = F.broadcast(winners) if n_keys <= BROADCAST_KEY_LIMIT else winners
+            latest = winner_probe(events, rhs, key=KEY)
 
             # Stage the winner rows FIRST, before any shuffle or Python
-            # stage, so the one pass over the raw batch is a single
-            # narrow codegen pipeline: scan -> long-key probe -> exact
-            # filter -> parquet write. Dedup, payload unpacking and the
-            # merge then all operate on the tiny staged delta.
-            delta_path = None
+            # stage, so the one pass over the raw batch is a single narrow
+            # codegen pipeline: scan -> long-key probe -> exact filter ->
+            # parquet write. Dedup, payload unpacking and the merge then all
+            # re-read the tiny staged delta, so the raw scan runs exactly
+            # once and nothing depends on Spark cache retention.
+            if isinstance(self.table, ManifestParquetTable):
+                # the TABLE's own storage: on a real cluster that is shared
+                # (S3/HDFS), whereas a driver-local tempdir is invisible to
+                # executors
+                delta_path = os.path.join(
+                    self.table.path, "_staging_delta", f"delta-{batch_id}"
+                )
+            else:
+                delta_path = tempfile.mkdtemp(prefix=f"rap-etl-delta-{batch_id}-")
             stage_obs = None
             try:
-                if self.stage_delta:
-                    if self.staging_dir:
-                        delta_path = os.path.join(self.staging_dir, f"delta-{batch_id}")
-                    elif isinstance(self.table, ManifestParquetTable):
-                        # default to the TABLE's own storage: on a real
-                        # cluster that is shared (S3/HDFS), whereas a
-                        # driver-local tempdir is invisible to executors
-                        delta_path = os.path.join(
-                            self.table.path, "_staging_delta", f"delta-{batch_id}"
-                        )
-                    else:
-                        delta_path = tempfile.mkdtemp(
-                            prefix=f"rap-etl-delta-{batch_id}-"
-                        )
-                    _t = time.monotonic()
-                    # repartition to core count: winner rows are a tiny
-                    # fraction of the scan, so without this every scan task
-                    # commits its own near-empty file (one per input split
-                    # -> serial driver-side commit renames). The shuffle
-                    # moves only winner rows and keeps the scan at full
-                    # parallelism (a coalesce would throttle the scan).
-                    # Hash by KEY rather than round-robin: duplicate
-                    # deliveries of a winner event are byte-identical, and
-                    # hashpartitioning(KEY) satisfies dropDuplicates'
-                    # clustering requirement, so the dedup collapses them
-                    # INSIDE the staging exchange — the staged delta lands
-                    # already one-row-per-key and the merge job loses its
-                    # separate dedup shuffle.
-                    n_out = max(self.spark.sparkContext.defaultParallelism, 4)
-                    staged = latest.repartition(
-                        n_out, F.col(KEY)
-                    ).dropDuplicates([KEY])
-                    if (
-                        not self.diff_first
-                        and self.dedup_policy is None
-                        and isinstance(self.table, ManifestParquetTable)
-                    ):
-                        # Piggyback the merge hints on the staging job via
-                        # df.observe (zero extra scan, zero extra job): the
-                        # exact post-dedup row count and the affected-bucket
-                        # set fall out of the same pass that writes the
-                        # delta. This removes the former bucket-discovery
-                        # job from the per-batch serial floor — at a real
-                        # batch cadence every driver-side barrier between
-                        # scan and commit is pure serial time that caps the
-                        # N->4N scaling efficiency.
-                        from pyspark.sql import Observation
+                _t = time.monotonic()
+                # repartition to core count: winner rows are a tiny fraction
+                # of the scan, so without this every scan task commits its
+                # own near-empty file (one per input split -> serial
+                # driver-side commit renames). The shuffle moves only winner
+                # rows and keeps the scan at full parallelism (a coalesce
+                # would throttle the scan). Hash by KEY rather than
+                # round-robin: duplicate deliveries of a winner event are
+                # byte-identical, and hashpartitioning(KEY) satisfies
+                # dropDuplicates' clustering requirement, so the dedup
+                # collapses them INSIDE the staging exchange — the staged
+                # delta lands already one-row-per-key and the merge job
+                # loses its separate dedup shuffle.
+                n_out = max(self.spark.sparkContext.defaultParallelism, 4)
+                staged = latest.repartition(n_out, F.col(KEY)).dropDuplicates([KEY])
+                if self.dedup_policy is None and isinstance(
+                    self.table, ManifestParquetTable
+                ):
+                    # Piggyback the merge hints on the staging job via
+                    # df.observe (zero extra scan, zero extra job): the exact
+                    # post-dedup row count and the affected-bucket set fall
+                    # out of the same pass that writes the delta. This
+                    # removes the former bucket-discovery job from the
+                    # per-batch serial floor — at a real batch cadence every
+                    # driver-side barrier between scan and commit is pure
+                    # serial time that caps the N->4N scaling efficiency.
+                    from pyspark.sql import Observation
 
-                        stage_obs = Observation(f"stage-{batch_id}-{id(self)}")
-                        # the modulus the hint buckets are computed under:
-                        # an OCC rebase may land this merge AFTER a racing
-                        # split/merge_buckets commit changed the table's
-                        # modulus — merge() matches the hints as zones at
-                        # THIS modulus, which stays exact either way
-                        stage_nb = self.table.n_buckets()
-                        staged = staged.observe(
-                            stage_obs,
-                            F.count(F.lit(1)).alias("n"),
-                            F.collect_set(
-                                self.table._bucket_expr(KEY)
-                            ).alias("buckets"),
-                        )
-                    staged.write.mode("overwrite").parquet(delta_path)
-                    _tlog("engine.stage_delta_write", _t)
-                    latest = self.spark.read.parquet(delta_path)
-                else:
-                    # unstaged path: collapse duplicate deliveries to
-                    # strictly one row per key (tiny shuffle: only winner
-                    # rows are left). The staged path deduped during the
-                    # staging exchange above.
-                    latest = latest.dropDuplicates([KEY])
+                    stage_obs = Observation(f"stage-{batch_id}-{id(self)}")
+                    # the modulus the hint buckets are computed under: an
+                    # OCC rebase may land this merge AFTER a racing
+                    # split/merge_buckets commit changed the table's modulus
+                    # — merge() matches the hints as zones at THIS modulus,
+                    # which stays exact either way
+                    stage_nb = self.table.n_buckets()
+                    staged = staged.observe(
+                        stage_obs,
+                        F.count(F.lit(1)).alias("n"),
+                        F.collect_set(self.table._bucket_expr(KEY)).alias("buckets"),
+                    )
+                staged.write.mode("overwrite").parquet(delta_path)
+                _tlog("engine.stage_delta_write", _t)
+                latest = self.spark.read.parquet(delta_path)
 
                 # packed WAL wire format: the scan/LWW above never decoded
                 # token arrays (binary blob per row); expand ONLY the winner
@@ -363,22 +325,15 @@ class CdcEngine:
                     # payload columns follow the table's CURRENT schema
                     # (schema evolution: an added column like `lang` must
                     # flow through). Recomputed per attempt: an OCC retry
-                    # must diff/merge against the REFRESHED manifest, and
-                    # the version-conditional merge makes re-applying the
-                    # same staged delta safe (c_v > o_v filters replays).
+                    # must merge against the REFRESHED manifest, and the
+                    # version-conditional merge makes re-applying the same
+                    # staged delta safe (c_v > o_v filters replays).
                     payload_cols = [
                         f.name
                         for f in self.table.schema().fields
                         if f.name != KEY and f.name in latest.columns
                     ]
-                    if self.diff_first:
-                        current = self.table.read()
-                        diff = diff_against_table(latest, current, payload_cols)
-                        changes = diff.filter(F.col("action") != "N").drop("action")
-                    else:
-                        changes = latest
-
-                    payload = changes.select(KEY, "op", "lsn", *payload_cols)
+                    payload = latest.select(KEY, "op", "lsn", *payload_cols)
                     # Merge hints came for free from the staging job's
                     # observation (exact post-dedup row count + affected
                     # bucket set — the staging dedup guarantees one row per
@@ -387,10 +342,10 @@ class CdcEngine:
                     # once and runs no discovery job — every removed
                     # driver-side barrier between scan and commit is serial
                     # time that caps the N->4N scaling efficiency. The
-                    # observation is only attached when diff_first and
-                    # dedup_policy are off (those shrink the key set after
-                    # staging, which would make the hint a superset and the
-                    # count an overstatement).
+                    # observation is only attached when dedup_policy is off
+                    # (it shrinks the key set after staging, which would
+                    # make the hint a superset and the count an
+                    # overstatement).
                     if stage_obs is not None:
                         got = stage_obs.get  # staging job already ran
                         hint_rows = int(got["n"])
@@ -438,28 +393,27 @@ class CdcEngine:
                             )
                             break
             finally:
-                if delta_path is not None:
-                    # delete through the same filesystem abstraction the
-                    # write used: a driver-local rmtree would silently leak
-                    # the delta every batch on shared storage (S3/HDFS
-                    # staging). Failures are surfaced, not swallowed.
-                    from rap_etl_spark.lake import (
-                        hadoop_fs_delete,
-                        hadoop_fs_rmdir_if_empty,
+                # delete through the same filesystem abstraction the
+                # write used: a driver-local rmtree would silently leak
+                # the delta every batch on shared storage (S3/HDFS
+                # staging). Failures are surfaced, not swallowed.
+                from rap_etl_spark.lake import (
+                    hadoop_fs_delete,
+                    hadoop_fs_rmdir_if_empty,
+                )
+
+                try:
+                    hadoop_fs_delete(self.spark, delta_path)
+                    hadoop_fs_rmdir_if_empty(
+                        self.spark, os.path.dirname(delta_path)
                     )
+                except Exception as e:  # noqa: BLE001
+                    import warnings
 
-                    try:
-                        hadoop_fs_delete(self.spark, delta_path)
-                        hadoop_fs_rmdir_if_empty(
-                            self.spark, os.path.dirname(delta_path)
-                        )
-                    except Exception as e:  # noqa: BLE001
-                        import warnings
-
-                        warnings.warn(
-                            f"staged-delta cleanup failed for {delta_path}: {e}",
-                            stacklevel=2,
-                        )
+                    warnings.warn(
+                        f"staged-delta cleanup failed for {delta_path}: {e}",
+                        stacklevel=2,
+                    )
 
             if q_obs is not None:
                 # The observation fired with the first action over the
@@ -601,14 +555,12 @@ def replay_log(
     table: ManifestParquetTable,
     log_dir: str,
     lineage_dir: str | None = None,
-    diff_first: bool = False,
     count_input: bool = True,
 ) -> list[BatchMetrics]:
     """Batch-replay an event log written by write_event_log (batch=<i>/
     partitions) in batch order — the batch-mode twin of the streaming tail."""
     engine = CdcEngine(
-        spark, table, lineage_dir=lineage_dir, diff_first=diff_first,
-        count_input=count_input,
+        spark, table, lineage_dir=lineage_dir, count_input=count_input
     )
     batches = sorted(
         int(d.split("=", 1)[1]) for d in os.listdir(log_dir) if d.startswith("batch=")
@@ -641,7 +593,10 @@ def requeue_quarantine(
       requeued event superseded meanwhile loses by version, one still
       current applies its final state.
     - The requeue itself commits through the table ledger under
-      ``batch_id``; redelivering the same requeue is a skip.
+      ``batch_id``; redelivering the same requeue is a skip. Reusing a
+      committed ``batch_id`` for NEW dead-letter leaves raises
+      ``ValueError`` before anything is written or marked — the ledger
+      would skip them, and marking them would drop their rows.
     - The consumed leaf set is RECORDED FIRST: an atomic per-batch_id
       pending manifest (``_requeue-pending-<id>``, tmp+rename) is written
       before ``apply_batch``, and a rerun with the same batch_id replays
@@ -721,6 +676,14 @@ def requeue_quarantine(
     if good.limit(1).count() == 0:
         return None
     if not os.path.exists(pending):
+        if engine.table.is_committed(batch_id):
+            # a fresh listing under an already-committed id would be
+            # skipped by the ledger and then marked consumed: its rows
+            # would be lost
+            raise ValueError(
+                f"requeue batch id {batch_id} is already committed; "
+                "use a fresh batch id for new dead letters"
+            )
         tmp = pending + ".tmp"
         with open(tmp, "w") as f:
             json.dump(leaves, f)

@@ -1,22 +1,26 @@
-"""Core CDC operators: dedup (C1), last-writer-wins (C2), diff (C3).
+"""Core CDC operators: dedup (C1), last-writer-wins (C2), snapshot diff (C3).
 
 Generalizes the reference's per-record pipeline (SURVEY.md §1.1): rap-etl
 maps each publication record to a fresh RDF subgraph, diffs it against the
 currently-published graph, and publishes only the delta; re-processing an
 unchanged record yields an empty diff. Here: change events are deduplicated
-by (doc_id, lsn), reduced to the max-LSN winner per key, and diffed against
-the current table state so unchanged rows produce no writes.
+by (doc_id, lsn) and reduced to the max-LSN winner per key; the engine's
+version-conditional merge and batch ledger make re-applying a batch a no-op,
+and ``snapshot_diff`` reconciles a full source snapshot into adds and
+removes.
 
 Scale notes:
-- ``lww_latest`` offers three physical strategies (see its docstring); the
-  naive max_by-with-payload aggregation is the WORST for token arrays — a
-  variable-width agg buffer forces SortAggregate, sorting every payload.
-  The default window strategy shuffles the batch once by key; the join
-  strategy aggregates only (key, max lsn) fixed-width — map-side partial
-  combine collapses Zipf-hot keys per task — then semi-joins payloads back.
-- ``dedup_events`` is subsumed by lww_latest when duplicate deliveries carry
-  identical payloads (they do, per the WAL contract) — the engine therefore
-  runs one reduction, not two shuffles.
+- The engine (engine.py) runs one apply path: aggregate only (key, max lsn)
+  — fixed-width buffers, map-side partial combine collapses Zipf-hot keys
+  per task — then ``winner_probe`` fetches the winners' full rows, broadcast
+  or shuffled by the observed winner count.
+- ``lww_latest`` keeps three physical strategies as standalone operators
+  (see its docstring); the naive max_by-with-payload aggregation is the
+  WORST for token arrays — a variable-width agg buffer forces
+  SortAggregate, sorting every payload.
+- ``dedup_events`` is subsumed by the LWW reduction when duplicate
+  deliveries carry identical payloads (they do, per the WAL contract) —
+  the engine therefore runs one reduction, not two shuffles.
 """
 
 from __future__ import annotations
@@ -114,11 +118,6 @@ def lww_latest(events: DataFrame, key: str = KEY, strategy: str = "window") -> D
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-
-
-def lww_latest_window(events: DataFrame) -> DataFrame:
-    """C2 window variant — alias for the default strategy."""
-    return lww_latest(events, strategy="window")
 
 
 def lww_latest_salted(events: DataFrame, salt_buckets: int = 16) -> DataFrame:
@@ -301,36 +300,6 @@ def payload_hash(df: DataFrame, payload_cols: list[str]):
     """Order-stable 64-bit content hash of a row's payload (C3/C5/F2).
     xxhash64 natively hashes arrays/structs JVM-side — no JSON round-trip."""
     return F.xxhash64(*[F.col(c) for c in payload_cols])
-
-
-def diff_against_table(
-    latest: DataFrame, current: DataFrame, payload_cols: list[str]
-) -> DataFrame:
-    """C3: classify each LWW winner against the current table state:
-      I  key absent from table, op != 'D'      (the reference's `new_only`)
-      U  key present, op != 'D', payload hash differs
-      D  key present, op == 'D'                (the reference's `old_only`)
-      N  no-op: payload unchanged, or a delete for an absent key
-
-    Re-applying an already-applied batch therefore yields only N rows — the
-    empty-diff idempotency of the reference, lifted to tables. Returns
-    latest's columns + `action`.
-    """
-    lat = latest.alias("s")
-    cur = (
-        current.select(
-            F.col(KEY), payload_hash(current, payload_cols).alias("_cur_hash")
-        ).alias("t")
-    )
-    joined = lat.join(cur, on=F.col(f"s.{KEY}") == F.col(f"t.{KEY}"), how="left")
-    new_hash = payload_hash(lat, [f"s.{c}" for c in payload_cols])
-    action = (
-        F.when(F.col("s.op") == "D", F.when(F.col("t._cur_hash").isNull(), "N").otherwise("D"))
-        .when(F.col("t._cur_hash").isNull(), "I")
-        .when(F.col("t._cur_hash") != new_hash, "U")
-        .otherwise("N")
-    )
-    return joined.select("s.*", action.alias("action"))
 
 
 # --------------------------------------------------------------------------
@@ -611,10 +580,9 @@ def snapshot_diff(
     """Reconcile a FULL source snapshot against the current table state —
     the generalization of rap-etl's core publishing step (SURVEY.md §1.1:
     per-record subgraph diffed into `new_only` adds and `old_only`
-    removes). Where `diff_against_table` classifies a CDC winner batch
-    (left join — table-only keys are untouched by definition), a snapshot
-    asserts the COMPLETE truth, so a key present in the table but absent
-    from the snapshot is a delete:
+    removes). Unlike a CDC winner batch, which leaves keys it does not
+    carry untouched, a snapshot asserts the COMPLETE truth, so a key
+    present in the table but absent from the snapshot is a delete:
 
       I  snapshot-only                      (reference `new_only` → add)
       D  table-only                         (reference `old_only` → remove)

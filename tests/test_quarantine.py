@@ -338,6 +338,36 @@ def test_requeue_crash_rerun_marks_only_recorded_leaves(spark, tmp_path):  # noq
     assert state == {"a": 2, "b": 1}
 
 
+def test_requeue_reusing_committed_id_refuses_new_leaves(spark, tmp_path):  # noqa: F811
+    """A completed requeue's batch id is in the ledger: reusing it for dead
+    letters that arrived later must refuse before marking them, since the
+    ledger would skip the apply and the marker would drop their rows."""
+    import pytest
+
+    from rap_etl_spark.engine import requeue_quarantine
+
+    t = ManifestParquetTable.create(
+        spark, str(tmp_path / "t"), SCHEMA, n_buckets=4
+    )
+    qdir = str(tmp_path / "dlq")
+    eng = CdcEngine(spark, t, quarantine_dir=qdir)
+    fix = {"n_tok": "size(tokens)"}
+    eng.apply_batch(_events(spark, [("U", "a", 1, [1, 2], 9)]), batch_id=0)
+    assert requeue_quarantine(spark, eng, qdir, batch_id=101, fixes=fix) is not None
+    eng.apply_batch(_events(spark, [("U", "b", 2, [5], 9)]), batch_id=1)
+    with pytest.raises(ValueError, match="already committed"):
+        requeue_quarantine(spark, eng, qdir, batch_id=101, fixes=fix)
+    assert not any(
+        x.startswith("_requeued")
+        for x in os.listdir(os.path.join(qdir, "batch=1"))
+    )
+    assert not os.path.exists(os.path.join(qdir, "_requeue-pending-101"))
+    m = requeue_quarantine(spark, eng, qdir, batch_id=102, fixes=fix)
+    assert m is not None and m.applied_rows == 1
+    state = {r["doc_id"]: r["n_tok"] for r in t.read().collect()}
+    assert state == {"a": 2, "b": 1}
+
+
 def test_requeue_still_invalid_rows_stay_requeueable(spark, tmp_path):  # noqa: F811
     """Rows a requeue could NOT repair are rewritten into a fresh
     unmarked leaf, so a later requeue with a better fix picks them up —

@@ -3,12 +3,15 @@ assert final-state equivalence vs the naive oracle (the reference's
 diff-then-assert pattern lifted to tables), plus exactly-once redelivery and
 partitioning-independence properties."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+from rap_etl_spark import engine as engine_mod
 from rap_etl_spark.engine import CdcEngine, assert_equivalent, replay_log
 from rap_etl_spark.lake import ManifestParquetTable
-from rap_etl_spark.operators.cdc import lww_latest, lww_latest_salted, lww_latest_window
+from rap_etl_spark.operators.cdc import lww_latest, lww_latest_salted
 from rap_etl_spark.schemas import DOCS_SCHEMA
 from rap_etl_spark.sources.synth import synthesize_events, write_event_log
 
@@ -95,10 +98,16 @@ def test_convergence_under_different_batch_splits(spark, event_log, tmp_path):
     assert_equivalent(t_b.read(), t_c.read())
 
 
+def _batch_ids(event_log):
+    return sorted(
+        int(d.split("=")[1]) for d in os.listdir(event_log) if d.startswith("batch=")
+    )
+
+
 def test_lww_variants_agree(spark, event_log):
     ev = spark.read.parquet(event_log)
-    a = lww_latest(ev)
-    b = lww_latest_window(ev)
+    a = lww_latest(ev, strategy="join")
+    b = lww_latest(ev, strategy="window")
     c = lww_latest_salted(ev, salt_buckets=4)
     for other in (b, c):
         diff = a.select("doc_id", "lsn").exceptAll(other.select("doc_id", "lsn"))
@@ -106,45 +115,54 @@ def test_lww_variants_agree(spark, event_log):
     assert a.count() == b.count() == c.count()
 
 
-def test_diff_first_mode_matches(spark, event_log, tmp_path):
-    t = ManifestParquetTable.create(spark, str(tmp_path / "t"), DOCS_SCHEMA, n_buckets=8)
-    replay_log(spark, t, event_log, diff_first=True)
+@pytest.mark.parametrize("merge_mode", ["cow", "mor"])
+def test_default_engine_merges_staged_delta_with_hints(
+    spark, event_log, tmp_path, merge_mode
+):
+    """The engine's one apply path: every batch is staged, and the merge
+    gets the exact row count observed on the staging write (plus the
+    affected-bucket set for CoW, which reads the buckets it rewrites). The
+    staging directory is gone after every batch."""
+    t = ManifestParquetTable.create(
+        spark, str(tmp_path / "t"), DOCS_SCHEMA, n_buckets=8, merge_mode=merge_mode
+    )
+    calls = []
+    merge = t.merge
+
+    def recording_merge(changes, **kwargs):
+        calls.append(kwargs)
+        return merge(changes, **kwargs)
+
+    t.merge = recording_merge
+    eng = CdcEngine(spark, t)
+    staging = os.path.join(t.path, "_staging_delta")
+    for b in _batch_ids(event_log):
+        batch = spark.read.parquet(f"{event_log}/batch={b}")
+        eng.apply_batch(batch, batch_id=b)
+        kw = calls[-1]
+        assert kw["batch_id"] == b
+        assert kw["n_rows"] == batch.select("doc_id").distinct().count()
+        if merge_mode == "cow":
+            assert kw["affected_buckets"]
+            assert kw["affected_buckets"] <= set(range(8))
+        else:
+            assert "affected_buckets" not in kw
+        assert not os.path.exists(staging)
+    assert len(calls) == len(_batch_ids(event_log))
     want = naive_final_state(spark.read.parquet(event_log).toPandas())
     assert_frames_equal(t.read().toPandas(), want)
 
 
-def test_replay_with_shuffled_winner_join(spark, event_log, tmp_path):
-    """broadcast_key_limit=1 forces the shuffled (non-broadcast) winner
+def test_replay_with_shuffled_winner_join(spark, event_log, tmp_path, monkeypatch):
+    """BROADCAST_KEY_LIMIT=1 forces the shuffled (non-broadcast) winner
     join — the path large cluster batches (>5M keys) take — which must
     produce the identical final state."""
+    monkeypatch.setattr(engine_mod, "BROADCAST_KEY_LIMIT", 1)
     t = ManifestParquetTable.create(
         spark, str(tmp_path / "tsj"), DOCS_SCHEMA, n_buckets=8
     )
-    eng = CdcEngine(spark, t, count_input=False, broadcast_key_limit=1)
-    import os
-
-    for b in sorted(
-        int(d.split("=")[1]) for d in os.listdir(event_log) if d.startswith("batch=")
-    ):
-        eng.apply_batch(
-            spark.read.parquet(f"{event_log}/batch={b}"), batch_id=b
-        )
-    want = naive_final_state(spark.read.parquet(event_log).toPandas())
-    assert_frames_equal(t.read().toPandas(), want)
-
-
-def test_replay_with_window_strategy_engine(spark, event_log, tmp_path):
-    """Engine end-to-end on the window LWW strategy (one shuffle by key)
-    — same final state as the join strategy."""
-    t = ManifestParquetTable.create(
-        spark, str(tmp_path / "twin"), DOCS_SCHEMA, n_buckets=8
-    )
-    eng = CdcEngine(spark, t, count_input=False, lww_strategy="window")
-    import os
-
-    for b in sorted(
-        int(d.split("=")[1]) for d in os.listdir(event_log) if d.startswith("batch=")
-    ):
+    eng = CdcEngine(spark, t, count_input=False)
+    for b in _batch_ids(event_log):
         eng.apply_batch(
             spark.read.parquet(f"{event_log}/batch={b}"), batch_id=b
         )
