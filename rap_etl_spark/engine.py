@@ -17,7 +17,6 @@ the identical table state.
 from __future__ import annotations
 
 import os
-import tempfile
 import time
 from dataclasses import dataclass, field
 
@@ -27,7 +26,6 @@ from pyspark.sql import functions as F
 from rap_etl_spark.lake import (
     CommitConflictError,
     CommitInfo,
-    LakeTable,
     ManifestParquetTable,
     _is_widening,
     _tlog,
@@ -59,7 +57,7 @@ class BatchMetrics:
 @dataclass
 class CdcEngine:
     spark: SparkSession
-    table: LakeTable
+    table: ManifestParquetTable
     lineage_dir: str | None = None
     count_input: bool = True  # per-batch input count (extra pass when no lineage)
     # Multi-writer OCC: how many times to rebase-and-retry a merge whose
@@ -238,15 +236,12 @@ class CdcEngine:
             # parquet write. Dedup, payload unpacking and the merge then all
             # re-read the tiny staged delta, so the raw scan runs exactly
             # once and nothing depends on Spark cache retention.
-            if isinstance(self.table, ManifestParquetTable):
-                # the TABLE's own storage: on a real cluster that is shared
-                # (S3/HDFS), whereas a driver-local tempdir is invisible to
-                # executors
-                delta_path = os.path.join(
-                    self.table.path, "_staging_delta", f"delta-{batch_id}"
-                )
-            else:
-                delta_path = tempfile.mkdtemp(prefix=f"rap-etl-delta-{batch_id}-")
+            # staged under the TABLE's own storage: on a real cluster that
+            # is shared (S3/HDFS), whereas a driver-local tempdir is
+            # invisible to executors
+            delta_path = os.path.join(
+                self.table.path, "_staging_delta", f"delta-{batch_id}"
+            )
             stage_obs = None
             try:
                 _t = time.monotonic()
@@ -264,9 +259,7 @@ class CdcEngine:
                 # loses its separate dedup shuffle.
                 n_out = max(self.spark.sparkContext.defaultParallelism, 4)
                 staged = latest.repartition(n_out, F.col(KEY)).dropDuplicates([KEY])
-                if self.dedup_policy is None and isinstance(
-                    self.table, ManifestParquetTable
-                ):
+                if self.dedup_policy is None:
                     # Piggyback the merge hints on the staging job via
                     # df.observe (zero extra scan, zero extra job): the exact
                     # post-dedup row count and the affected-bucket set fall
@@ -382,16 +375,7 @@ class CdcEngine:
                     except CommitConflictError:
                         if attempt == self.occ_retries:
                             raise
-                        if isinstance(self.table, ManifestParquetTable):
-                            self.table.refresh()
-                        if self.table.is_committed(batch_id):
-                            info = CommitInfo(
-                                snapshot_id=self.table.snapshot_id(),
-                                batch_id=batch_id,
-                                rows_written=0,
-                                skipped=True,
-                            )
-                            break
+                        self.table.refresh()
             finally:
                 # delete through the same filesystem abstraction the
                 # write used: a driver-local rmtree would silently leak
@@ -451,11 +435,7 @@ class CdcEngine:
                 input_rows = events.count()
             if self.lineage_dir is not None:
                 self._write_lineage(events, batch_id, info)
-            if (
-                self.auto_materialize_depth is not None
-                and not info.skipped
-                and isinstance(self.table, ManifestParquetTable)
-            ):
+            if self.auto_materialize_depth is not None and not info.skipped:
                 deep = {
                     b
                     for b, d in self.table.delta_depth().items()
@@ -465,11 +445,7 @@ class CdcEngine:
                     _t = time.monotonic()
                     self.table.materialize_deltas(buckets=deep)
                     _tlog("engine.auto_materialize", _t)
-            if (
-                self.auto_compact_files is not None
-                and not info.skipped
-                and isinstance(self.table, ManifestParquetTable)
-            ):
+            if self.auto_compact_files is not None and not info.skipped:
                 frag = {
                     b
                     for b, n in self.table.files_per_bucket().items()
@@ -479,11 +455,7 @@ class CdcEngine:
                     _t = time.monotonic()
                     self.table.compact_buckets(frag)
                     _tlog("engine.auto_compact", _t)
-            if (
-                self.auto_split_rows is not None
-                and not info.skipped
-                and isinstance(self.table, ManifestParquetTable)
-            ):
+            if self.auto_split_rows is not None and not info.skipped:
                 mani = self.table._manifest()
                 live = sum(
                     int(fe.get("rows", 0))

@@ -32,10 +32,15 @@ Scale design (100 TB story):
 - Commit is a single atomic rename of the manifest pointer — one driver-side
   metadata operation per micro-batch, no data-path coordination.
 
-Two backends behind one ABC:
-- ``ManifestParquetTable`` — sandbox default (no Iceberg jar available here).
-- ``IcebergTable`` — thin SQL passthrough (MERGE INTO / ALTER TABLE), usable
-  when a real catalog is configured on a cluster; not exercised in-sandbox.
+- Exactly-once: every ledgered write (append, merge, delete_where,
+  update_where) skips an already-committed batch id through ``_skipped``
+  and commits through ``_commit``, which records the batch's
+  ``{snapshot_id, event_count}`` ledger entry in the same manifest as its
+  data.
+
+``ManifestParquetTable`` is the one table type the engine writes.
+``IcebergTable`` is a call-sequence record of a SQL passthrough to a real
+catalog; it is no engine backend (see its docstring).
 """
 
 from __future__ import annotations
@@ -45,7 +50,6 @@ import os
 import re
 import time
 import uuid
-from abc import ABC, abstractmethod
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -312,37 +316,7 @@ def _fold_modulus(files: list[dict], default_nb: int) -> int:
     return lo
 
 
-class LakeTable(ABC):
-    """What the engine needs from a table format (SURVEY.md §7.2)."""
-
-    @abstractmethod
-    def schema(self) -> T.StructType: ...
-
-    @abstractmethod
-    def read(self, snapshot_id: str | None = None) -> DataFrame: ...
-
-    @abstractmethod
-    def merge(self, changes: DataFrame, batch_id: int | None = None) -> CommitInfo:
-        """Upsert: changes has key + payload + op ('I'/'U' upsert, 'D' delete),
-        at most one row per key. Idempotent per batch_id."""
-
-    @abstractmethod
-    def evolve(self, new_schema: T.StructType) -> None: ...
-
-    @abstractmethod
-    def snapshot_id(self) -> str: ...
-
-    @abstractmethod
-    def committed_batches(self) -> dict[str, dict]: ...
-
-    def is_committed(self, batch_id: int | None) -> bool:
-        """True iff this batch_id was already applied (idempotency check).
-        Backends with a pruned ledger override this to also honor the
-        ledger horizon."""
-        return batch_id is not None and str(batch_id) in self.committed_batches()
-
-
-class ManifestParquetTable(LakeTable):
+class ManifestParquetTable:
     """Parquet data files + JSON manifest with an atomically-renamed pointer.
 
     Layout::
@@ -712,6 +686,27 @@ class ManifestParquetTable(LakeTable):
 
     def refresh(self) -> None:
         self._manifest(refresh=True)
+
+    def _skipped(self, m: dict, batch_id: int | None) -> CommitInfo | None:
+        """A ledgered write's redelivery answer: None while `batch_id` still
+        has to run, else a skip naming the snapshot that committed it (the
+        current one once its ledger entry was pruned)."""
+        if not self.is_committed(batch_id):
+            return None
+        prev = m["committed"].get(str(batch_id), {"snapshot_id": m["snapshot_id"]})
+        return CommitInfo(prev["snapshot_id"], batch_id, 0, skipped=True)
+
+    def _commit(self, nxt: dict, batch_id: int | None, rows: int) -> CommitInfo:
+        """Commit a ledgered write: the batch ledger entry rides the same
+        manifest as the data, so the batch and its ledger entry become
+        visible in one atomic pointer swap."""
+        if batch_id is not None:
+            nxt["committed"][str(batch_id)] = {
+                "snapshot_id": nxt["snapshot_id"],
+                "event_count": rows,
+            }
+        self._write_manifest(nxt)
+        return CommitInfo(nxt["snapshot_id"], batch_id, rows)
 
     # ---------- read path ----------
     @staticmethod
@@ -1277,9 +1272,8 @@ class ManifestParquetTable(LakeTable):
         unique keys, e.g. synthesized bootstrap data).
         """
         m = self._manifest()
-        if self.is_committed(batch_id):
-            prev = m["committed"].get(str(batch_id), {"snapshot_id": m["snapshot_id"]})
-            return CommitInfo(prev["snapshot_id"], batch_id, 0, skipped=True)
+        if skip := self._skipped(m, batch_id):
+            return skip
         data = self._with_meta(df, self.schema())
         _pinned = None
         if m.get("constraints"):
@@ -1321,14 +1315,7 @@ class ManifestParquetTable(LakeTable):
                 data, nxt["snapshot_id"], m["current_schema_version"]
             )
             nxt["files"] = m["files"] + entries
-            rows = int(df.count())
-            if batch_id is not None:
-                nxt["committed"][str(batch_id)] = {
-                    "snapshot_id": nxt["snapshot_id"],
-                    "event_count": rows,
-                }
-            self._write_manifest(nxt)
-            return CommitInfo(nxt["snapshot_id"], batch_id, rows)
+            return self._commit(nxt, batch_id, int(df.count()))
         finally:
             if _pinned is not None:
                 _pinned.unpersist()
@@ -1396,7 +1383,9 @@ class ManifestParquetTable(LakeTable):
         job, so the persist/materialize pass disappears entirely. A
         superset bucket hint is safe (an unchanged bucket is rewritten
         byte-equal via the full-outer join); a MISSING bucket would lose
-        changes, so hints must cover every change key's bucket.
+        changes, so hints must cover every change key's bucket. A bucket
+        hint needs ``n_rows`` (ValueError otherwise): the hinted path never
+        counts the change rows, and that count is the ledger's row count.
 
         ``affected_buckets_nb``: the bucket MODULUS the hints were computed
         under (default: the table's current one). An OCC rebase can land a
@@ -1409,9 +1398,8 @@ class ManifestParquetTable(LakeTable):
         key's file in either direction of the layout change.
         """
         m = self._manifest()
-        if self.is_committed(batch_id):
-            prev = m["committed"].get(str(batch_id), {"snapshot_id": m["snapshot_id"]})
-            return CommitInfo(prev["snapshot_id"], batch_id, 0, skipped=True)
+        if skip := self._skipped(m, batch_id):
+            return skip
 
         mode = mode or m.get("merge_mode", "cow")
         if mode not in ("cow", "mor"):
@@ -1424,6 +1412,11 @@ class ManifestParquetTable(LakeTable):
             raise ValueError(
                 "update_semantics='patch' requires mode='cow': MoR deltas "
                 "resolve row-wise at read time and would drop unset columns"
+            )
+        if affected_buckets is not None and n_rows is None:
+            raise ValueError(
+                "affected_buckets needs n_rows: the hinted merge never counts "
+                "the change rows, so the ledger would have no row count"
             )
         schema = self.schema()
         ch = self._with_meta(changes, schema).withColumn("_b", self._bucket_expr(self.key))
@@ -1458,19 +1451,13 @@ class ManifestParquetTable(LakeTable):
                     else sum(fe["rows"] for fe in entries)
                 )
                 nxt["files"] = m["files"] + entries
-                if batch_id is not None:
-                    nxt["committed"][str(batch_id)] = {
-                        "snapshot_id": nxt["snapshot_id"],
-                        "event_count": rows,
-                    }
-                self._write_manifest(nxt)
-                return CommitInfo(nxt["snapshot_id"], batch_id, rows)
+                return self._commit(nxt, batch_id, rows)
             finally:
                 if persisted:
                     ch.unpersist()
         if affected_buckets is not None:
             affected_set = {int(b) for b in affected_buckets}
-            rows = int(n_rows) if n_rows is not None else -1
+            rows = int(n_rows)
         else:
             # no hint: materialize once, then one job yields BOTH the
             # affected-bucket set and the change-row count (n_buckets tiny
@@ -1535,13 +1522,7 @@ class ManifestParquetTable(LakeTable):
                 )
                 _tlog("merge.write_data_files", _t0)
                 nxt["files"] = keep_entries + entries
-                if batch_id is not None:
-                    nxt["committed"][str(batch_id)] = {
-                        "snapshot_id": nxt["snapshot_id"],
-                        "event_count": rows,
-                    }
-                self._write_manifest(nxt)
-                return CommitInfo(nxt["snapshot_id"], batch_id, rows)
+                return self._commit(nxt, batch_id, rows)
             o = old_df.alias("o")
             c = ch.select(*old_df.columns).alias("c")
             o_key, c_key = F.col(f"o.{self.key}"), F.col(f"c.{self.key}")
@@ -1588,13 +1569,7 @@ class ManifestParquetTable(LakeTable):
             )
             _tlog("merge.write_data_files", _t0)
             nxt["files"] = keep_entries + entries
-            if batch_id is not None:
-                nxt["committed"][str(batch_id)] = {
-                    "snapshot_id": nxt["snapshot_id"],
-                    "event_count": rows,
-                }
-            self._write_manifest(nxt)
-            return CommitInfo(nxt["snapshot_id"], batch_id, rows)
+            return self._commit(nxt, batch_id, rows)
         finally:
             if persisted:
                 ch.unpersist()
@@ -1963,9 +1938,8 @@ class ManifestParquetTable(LakeTable):
           (same-version tiebreak: deletes win by d, updates by seq).
         """
         m = self._manifest()
-        if self.is_committed(batch_id):
-            prev = m["committed"].get(str(batch_id), {"snapshot_id": m["snapshot_id"]})
-            return CommitInfo(prev["snapshot_id"], batch_id, 0, skipped=True)
+        if skip := self._skipped(m, batch_id):
+            return skip
         if mode == "mor":
             matched = matched.persist()
             try:
@@ -1981,13 +1955,7 @@ class ManifestParquetTable(LakeTable):
                     seq=nxt["seq"],
                 )
                 nxt["files"] = m["files"] + entries
-                if batch_id is not None:
-                    nxt["committed"][str(batch_id)] = {
-                        "snapshot_id": nxt["snapshot_id"],
-                        "event_count": rows,
-                    }
-                self._write_manifest(nxt)
-                return CommitInfo(nxt["snapshot_id"], batch_id, rows)
+                return self._commit(nxt, batch_id, rows)
             finally:
                 matched.unpersist()
         stats = matched.groupBy("_b").agg(F.count(F.lit(1)).alias("_n")).collect()
@@ -2011,13 +1979,7 @@ class ManifestParquetTable(LakeTable):
             post, nxt["snapshot_id"], m["current_schema_version"]
         )
         nxt["files"] = keep_entries + entries
-        if batch_id is not None:
-            nxt["committed"][str(batch_id)] = {
-                "snapshot_id": nxt["snapshot_id"],
-                "event_count": rows,
-            }
-        self._write_manifest(nxt)
-        return CommitInfo(nxt["snapshot_id"], batch_id, rows)
+        return self._commit(nxt, batch_id, rows)
 
     def delete_where(
         self,
@@ -2116,9 +2078,8 @@ class ManifestParquetTable(LakeTable):
         how many DV deletes have accumulated, and superseded DV files
         become orphans for expire_snapshots."""
         m = self._manifest()
-        if self.is_committed(batch_id):
-            prev = m["committed"].get(str(batch_id), {"snapshot_id": m["snapshot_id"]})
-            return CommitInfo(prev["snapshot_id"], batch_id, 0, skipped=True)
+        if skip := self._skipped(m, batch_id):
+            return skip
         cond = F.expr(condition) if isinstance(condition, str) else condition
         schema = self.schema()
         matched_keys = (
@@ -2162,7 +2123,7 @@ class ManifestParquetTable(LakeTable):
             # re-upserted by a later merge, matched again) re-collects its
             # already-masked old positions — subtract the prior generation
             # so n_new counts only NEWLY masked positions (the ledger's
-            # event_count) and the fold below unions disjoint sets
+            # row count) and the fold below unions disjoint sets
             hits = hits.join(
                 self._dv_frame(old_dv), ["_dv_file", "_dv_pos"], "left_anti"
             )
@@ -2265,13 +2226,7 @@ class ManifestParquetTable(LakeTable):
                 )
                 for fe in m["files"]
             ]
-            if batch_id is not None:
-                nxt["committed"][str(batch_id)] = {
-                    "snapshot_id": nxt["snapshot_id"],
-                    "event_count": n_new,
-                }
-            self._write_manifest(nxt)
-            return CommitInfo(nxt["snapshot_id"], batch_id, n_new)
+            return self._commit(nxt, batch_id, n_new)
         finally:
             hits.unpersist()
 
@@ -3468,24 +3423,21 @@ class ManifestParquetTable(LakeTable):
         self._write_manifest(nxt)
 
 
-class IcebergTable(LakeTable):
-    """Thin passthrough to a real Iceberg catalog (SQL MERGE INTO / ALTER
-    TABLE). Activated only when spark.sql.catalog.* is configured on a real
-    cluster — no Iceberg jar exists in this sandbox, so this class is
-    integration-only (unit-tested against a recording stub session).
+class IcebergTable:
+    """SQL passthrough to a real Iceberg catalog (MERGE INTO / ALTER
+    TABLE), kept only as a call-sequence record: no Iceberg runtime jar
+    ships with this repository, so it runs only against the recording stub
+    session in tests/test_iceberg_stub.py, and nothing in the package
+    calls it. It is NOT an engine backend — ``CdcEngine`` and the
+    streaming tails take a ``ManifestParquetTable`` — because its MERGE
+    breaks the engine's contract: it has no ``lsn`` condition and
+    hard-deletes rows, so the out-of-order delivery that quarantine
+    requeue and chunked bootstrap rely on would overwrite newer rows and
+    bring deleted keys back.
 
-    Exactly-once contract (documented honestly): the committed-batch
-    ledger rides Iceberg TABLE PROPERTIES (`rap-etl.batch.<id>`), written
-    right after the MERGE. The MERGE and the property write are two
-    catalog commits, not one atomic transaction — a crash between them can
-    re-run the MERGE on redelivery. That is safe because this MERGE is
-    row-level CONVERGENT: re-applying the same change set deletes
-    already-deleted keys (no-op), re-updates matched keys to identical
-    values, and "inserts" now-matched keys as identical updates — the
-    table state is unchanged. The ledger is therefore an optimization
-    (skip re-reading the batch) and a lineage record, while correctness
-    rests on merge convergence — the same layering ManifestParquetTable
-    uses (version-conditional merge + ledger)."""
+    The committed-batch ledger rides TABLE PROPERTIES
+    (`rap-etl.batch.<id>`), written right after the MERGE as a second
+    catalog commit, not atomically with it."""
 
     _PROP_PREFIX = "rap-etl.batch."
 
@@ -3564,6 +3516,9 @@ class IcebergTable(LakeTable):
             "IcebergTable: use Iceberg's incremental read / changelog view; "
             "table_changes is implemented on ManifestParquetTable"
         )
+
+    def is_committed(self, batch_id: int | None) -> bool:
+        return batch_id is not None and str(batch_id) in self.committed_batches()
 
     def committed_batches(self) -> dict[str, dict]:
         """Ledger read-back from table properties (SHOW TBLPROPERTIES)."""

@@ -80,9 +80,13 @@ def observed_rows(obs: Observation) -> int | None:
     write it rode on, or None when it did not fire. The metrics reach the
     observation through Spark's listener bus just after the write
     returns; ``getRowOrEmpty`` waits up to 100 ms for them, where
-    ``Observation.get`` would block for ever on one that never fires."""
+    ``Observation.get`` would block for ever on one that never fires. An
+    observation the optimizer pruned to an empty relation fires with a
+    zero-length row, which also reads as None."""
     row = obs._jo.getRowOrEmpty()
-    return int(row.get().getLong(0)) if row.isDefined() else None
+    if not row.isDefined() or row.get().size() == 0:
+        return None
+    return int(row.get().getLong(0))
 
 
 def publish_changes(

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from rap_etl_spark.engine import CdcEngine
-from rap_etl_spark.lake import LakeTable
+from rap_etl_spark.lake import ManifestParquetTable
 from rap_etl_spark.schemas import EVENTS_SCHEMA
 
 
@@ -29,7 +29,7 @@ def stream_tail(
     spark: SparkSession,
     src_dir: str,
     checkpoint_dir: str,
-    table: LakeTable,
+    table: ManifestParquetTable,
     lineage_dir: str | None = None,
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
@@ -106,7 +106,7 @@ def stream_tail(
         # ledger + version-conditional merge turn that into exactly-once
         # table state (BASELINE.json north_star)
         engine.apply_batch(batch_df, batch_id=batch_id)
-        if publish_dir is not None and hasattr(table, "changes_for_batch"):
+        if publish_dir is not None:
             # downstream delta publishing per micro-batch (publish.py):
             # idempotent per batch, so foreachBatch's at-least-once
             # redelivery can only repair a missing publish, never double-
@@ -118,7 +118,6 @@ def stream_tail(
             prune_ledger_every
             and batch_id > 0
             and batch_id % prune_ledger_every == 0
-            and hasattr(table, "prune_ledger")
         ):
             table.prune_ledger(batch_id - 1)
         if mv_dirs:
@@ -146,7 +145,7 @@ def replay_stream(
     spark: SparkSession,
     src_dir: str,
     checkpoint_dir: str,
-    table: LakeTable,
+    table: ManifestParquetTable,
     **kw,
 ) -> None:
     """Run an availableNow tail to completion (blocking)."""
@@ -158,7 +157,7 @@ def stream_envelope_tail(
     spark: SparkSession,
     src_dir: str,
     checkpoint_dir: str,
-    table: LakeTable,
+    table: ManifestParquetTable,
     payload_ddl: str,
     dlq_dir: str | None = None,
     lineage_dir: str | None = None,

@@ -553,3 +553,48 @@ def test_lake_and_publish_build_frames_only_through_local_frame():
         for mod in (lake, publish)
     }
     assert found == {lake.__name__: ["local_frame"], publish.__name__: []}
+
+
+def test_ledger_written_in_one_place_and_engine_takes_one_table_type():
+    """``ManifestParquetTable._commit`` is the one writer of the batch
+    ledger entry and ``_skipped`` the one builder of the redelivery skip;
+    the engine and the streaming tails know no other table type. (The
+    ``IcebergTable`` call-sequence record keeps its own TBLPROPERTIES
+    ledger and is no engine backend.)"""
+    import ast
+    import inspect
+    import pathlib
+
+    from rap_etl_spark import lake
+
+    def owners(node, scope=()):
+        if isinstance(node, (ast.ClassDef, ast.FunctionDef)):
+            scope = (*scope, node.name)
+        if isinstance(node, ast.Constant) and node.value == "event_count":
+            yield ("event_count", scope)
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "is_committed"
+        ):
+            yield ("is_committed", scope)
+        for child in ast.iter_child_nodes(node):
+            yield from owners(child, scope)
+
+    found = sorted(set(owners(ast.parse(inspect.getsource(lake)))))
+    assert found == [
+        ("event_count", ("IcebergTable", "merge")),
+        ("event_count", ("ManifestParquetTable", "_commit")),
+        ("is_committed", ("IcebergTable", "merge")),
+        ("is_committed", ("ManifestParquetTable", "_skipped")),
+    ]
+
+    pkg = pathlib.Path(lake.__file__).parent
+    for py in pkg.rglob("*.py"):
+        src = py.read_text()
+        assert "LakeTable" not in src, py
+        if py.name != "lake.py":
+            assert "IcebergTable" not in src, py
+    engine = (pkg / "engine.py").read_text()
+    assert "isinstance(self.table" not in engine and "tempfile" not in engine
+    assert "hasattr(table" not in (pkg / "streaming" / "tail.py").read_text()

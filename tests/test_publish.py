@@ -235,3 +235,24 @@ def test_publish_converges_through_dv_delete(spark, tmp_path):
         (r["doc_id"], r["val"], r["src"]) for r in down.read().collect()
     )
     assert up_state == down_state == [("a", 11, "w")]
+
+
+def test_observed_rows_is_none_for_a_pruned_observation(spark):
+    """limit(0) lets the optimizer prune the observed plan to an empty
+    relation: the observation fires with a zero-length row, which must read
+    as "no count" (the caller then reads the leaf back), not raise."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    from rap_etl_spark.publish import observed_rows
+
+    obs = Observation("pruned-publish")
+    (
+        spark.range(100)
+        .observe(obs, F.count(F.lit(1)).alias("rows"))
+        .limit(0)
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
+    assert observed_rows(obs) is None

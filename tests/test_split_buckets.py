@@ -341,7 +341,12 @@ def test_merge_hints_survive_racing_split(spark, tmp_path):
     ManifestParquetTable(spark, path).split_buckets(2)
     t.refresh()  # the engine's rebase step
     t.merge(
-        ch, batch_id=1, affected_buckets=hints, affected_buckets_nb=4
+        ch,
+        batch_id=1,
+        affected_buckets=hints,
+        n_rows=ch.count(),
+        affected_buckets_nb=4,
     )
+    assert t.committed_batches()["1"]["event_count"] == len(BATCHES[1])
     assert state(t) == expected_state(BATCHES[:2])
     assert t.fast_count() == len(expected_state(BATCHES[:2]))
