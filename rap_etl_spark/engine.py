@@ -236,12 +236,11 @@ class CdcEngine:
             # parquet write. Dedup, payload unpacking and the merge then all
             # re-read the tiny staged delta, so the raw scan runs exactly
             # once and nothing depends on Spark cache retention.
-            # staged under the TABLE's own storage: on a real cluster that
-            # is shared (S3/HDFS), whereas a driver-local tempdir is
-            # invisible to executors
-            delta_path = os.path.join(
-                self.table.path, "_staging_delta", f"delta-{batch_id}"
-            )
+            # staged under the TABLE's own storage (on a real cluster that
+            # is shared S3/HDFS, whereas a driver-local tempdir is
+            # invisible to executors), flat beside lake.py's own
+            # _staging-<sid> dirs, and removed through the table's TableFS
+            delta_path = os.path.join(self.table.path, f"_staging_delta-{batch_id}")
             stage_obs = None
             try:
                 _t = time.monotonic()
@@ -377,27 +376,7 @@ class CdcEngine:
                             raise
                         self.table.refresh()
             finally:
-                # delete through the same filesystem abstraction the
-                # write used: a driver-local rmtree would silently leak
-                # the delta every batch on shared storage (S3/HDFS
-                # staging). Failures are surfaced, not swallowed.
-                from rap_etl_spark.lake import (
-                    hadoop_fs_delete,
-                    hadoop_fs_rmdir_if_empty,
-                )
-
-                try:
-                    hadoop_fs_delete(self.spark, delta_path)
-                    hadoop_fs_rmdir_if_empty(
-                        self.spark, os.path.dirname(delta_path)
-                    )
-                except Exception as e:  # noqa: BLE001
-                    import warnings
-
-                    warnings.warn(
-                        f"staged-delta cleanup failed for {delta_path}: {e}",
-                        stacklevel=2,
-                    )
+                self.table.fs.rmtree(delta_path)
 
             if q_obs is not None:
                 # The observation fired with the first action over the
@@ -569,8 +548,9 @@ def requeue_quarantine(
       committed ``batch_id`` for NEW dead-letter leaves raises
       ``ValueError`` before anything is written or marked — the ledger
       would skip them, and marking them would drop their rows.
-    - The consumed leaf set is RECORDED FIRST: an atomic per-batch_id
-      pending manifest (``_requeue-pending-<id>``, tmp+rename) is written
+    - The consumed leaf set is RECORDED FIRST: a per-batch_id pending
+      manifest (``_requeue-pending-<id>``, written atomically through the
+      table's ``TableFS`` like every requeue marker) lands
       before ``apply_batch``, and a rerun with the same batch_id replays
       exactly the recorded set — never a fresh listing. Without this, a
       crash between commit and marking would let dead-letter leaves
@@ -604,22 +584,22 @@ def requeue_quarantine(
         write_quarantine,
     )
 
+    fs = engine.table.fs
     pending = os.path.join(quarantine_dir, f"_requeue-pending-{batch_id}")
-    if os.path.exists(pending):
-        with open(pending) as f:
-            leaves = [
-                d
-                for d in json.load(f)
-                if os.path.isdir(os.path.join(quarantine_dir, d))
-            ]
+    if fs.exists(pending):
+        leaves = [
+            d
+            for d in json.loads(fs.read_text(pending))
+            if fs.exists(os.path.join(quarantine_dir, d))
+        ]
     else:
         leaves = [
             d
-            for d in sorted(os.listdir(quarantine_dir))
+            for d in sorted(fs.listdir(quarantine_dir))
             if d.startswith("batch=")
             and not any(
                 m.startswith("_requeued-")
-                for m in os.listdir(os.path.join(quarantine_dir, d))
+                for m in fs.listdir(os.path.join(quarantine_dir, d))
             )
         ]
     if not leaves:
@@ -647,7 +627,7 @@ def requeue_quarantine(
     good = reclass.filter(F.col(REASON_COL).isNull()).drop(REASON_COL)
     if good.limit(1).count() == 0:
         return None
-    if not os.path.exists(pending):
+    if not fs.exists(pending):
         if engine.table.is_committed(batch_id):
             # a fresh listing under an already-committed id would be
             # skipped by the ledger and then marked consumed: its rows
@@ -656,10 +636,7 @@ def requeue_quarantine(
                 f"requeue batch id {batch_id} is already committed; "
                 "use a fresh batch id for new dead letters"
             )
-        tmp = pending + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(leaves, f)
-        os.replace(tmp, pending)
+        fs.write_text_atomic(pending, json.dumps(leaves))
     metrics = engine.apply_batch(good, batch_id=batch_id)
     still_bad = reclass.filter(F.col(REASON_COL).isNotNull())
     if still_bad.limit(1).count() > 0:
@@ -668,10 +645,8 @@ def requeue_quarantine(
         # consumed nor marked by this requeue
         write_quarantine(still_bad, quarantine_dir, batch_id)
     for d in leaves:
-        marker = os.path.join(quarantine_dir, d, f"_requeued-{batch_id}")
-        with open(marker, "w") as f:
-            f.write("")
-    os.remove(pending)
+        fs.write_text(os.path.join(quarantine_dir, d, f"_requeued-{batch_id}"), "")
+    fs.remove(pending)
     return metrics
 
 

@@ -64,30 +64,6 @@ def _tlog(msg: str, t0: float) -> None:
         print(f"[rap-etl-timing] {msg}: {time.monotonic() - t0:.2f}s", flush=True)
 
 
-def hadoop_fs_delete(spark: SparkSession, path: str, recursive: bool = True) -> bool:
-    """Delete `path` through the Hadoop FileSystem API — works for any
-    scheme the Spark job itself can write to (file://, hdfs://, s3a://),
-    unlike driver-local shutil/os which silently do nothing for remote
-    paths. Returns True if something was deleted."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return False
-    return bool(fs.delete(jpath, recursive))
-
-
-def hadoop_fs_rmdir_if_empty(spark: SparkSession, path: str) -> bool:
-    """Remove `path` iff it is an empty directory (non-recursive)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jpath) and fs.getFileStatus(jpath).isDirectory():
-        if len(fs.listStatus(jpath)) == 0:
-            return bool(fs.delete(jpath, False))
-    return False
-
-
 class ConstraintViolationError(ValueError):
     """A change batch contains rows violating a table CHECK constraint;
     the commit was refused and no file was published."""
@@ -314,6 +290,36 @@ def _fold_modulus(files: list[dict], default_nb: int) -> int:
     if lo <= 0 or any(m % lo for m in mods):
         return 1
     return lo
+
+
+def _gc_tombstones(df: DataFrame, horizon_lsn: int | None) -> DataFrame:
+    """Drop delete tombstones with ``_lsn <= horizon_lsn`` from a resolved
+    with-meta frame (None keeps them all). Safe once no event at-or-below
+    the horizon can be redelivered, e.g. the streaming checkpoint's
+    committed offset: nothing older is left for a tombstone to outvote."""
+    if horizon_lsn is None:
+        return df
+    return df.filter(
+        ~(
+            F.coalesce(F.col(META_DEL), F.lit(False))
+            & (F.coalesce(F.col(META_LSN), F.lit(-1)) <= horizon_lsn)
+        )
+    )
+
+
+def _prune_ledger_to(nxt: dict, horizon_batch_id: int) -> int:
+    """Drop ledger entries at-or-below ``horizon_batch_id`` from an
+    uncommitted manifest and raise its recorded horizon (never lower it).
+    Returns the number of entries removed."""
+    committed = nxt["committed"]
+    nxt["committed"] = {
+        k: v for k, v in committed.items() if int(k) > horizon_batch_id
+    }
+    prev = nxt.get("ledger_horizon")
+    nxt["ledger_horizon"] = (
+        horizon_batch_id if prev is None else max(horizon_batch_id, int(prev))
+    )
+    return len(committed) - len(nxt["committed"])
 
 
 class ManifestParquetTable:
@@ -672,15 +678,10 @@ class ManifestParquetTable:
         O(1) metadata for the entire pruned history. Returns entries
         removed; commits a new snapshot only when something was pruned."""
         m = self._manifest()
-        keep = {k: v for k, v in m["committed"].items() if int(k) > horizon_batch_id}
-        removed = len(m["committed"]) - len(keep)
-        prev_h = m.get("ledger_horizon")
-        new_h = max(horizon_batch_id, int(prev_h)) if prev_h is not None else horizon_batch_id
-        if removed == 0 and prev_h is not None and new_h == int(prev_h):
-            return 0
         nxt = self._next_manifest(m)
-        nxt["committed"] = keep
-        nxt["ledger_horizon"] = new_h
+        removed = _prune_ledger_to(nxt, horizon_batch_id)
+        if removed == 0 and nxt["ledger_horizon"] == m.get("ledger_horizon"):
+            return 0
         self._write_manifest(nxt)
         return removed
 
@@ -1153,71 +1154,7 @@ class ManifestParquetTable:
                     "schema_version": schema_version,
                     "rows": int(md.num_rows),
                 }
-                try:
-                    kidx = md.schema.names.index(self.key)
-                    lo, hi = None, None
-                    for g in range(md.num_row_groups):
-                        st = md.row_group(g).column(kidx).statistics
-                        if st is None or not st.has_min_max:
-                            lo = hi = None
-                            break
-                        gmin, gmax = st.min, st.max
-                        lo = gmin if lo is None or gmin < lo else lo
-                        hi = gmax if hi is None or gmax > hi else hi
-                    # JSON-safe types only (string keys; skip exotic ones)
-                    if isinstance(lo, str) and isinstance(hi, str):
-                        entry["min_key"] = lo
-                        entry["max_key"] = hi
-                except (ValueError, TypeError):
-                    pass
-                try:
-                    # tombstone presence from the boolean column's footer
-                    # stats: max(_del)==False proves the file is all live
-                    # rows, which is what lets fast_count() answer from
-                    # metadata alone. Unknown stats -> omit (conservative).
-                    didx = md.schema.names.index(META_DEL)
-                    any_del, known = False, True
-                    for g in range(md.num_row_groups):
-                        st = md.row_group(g).column(didx).statistics
-                        if st is None or not st.has_min_max:
-                            known = False
-                            break
-                        if st.max:
-                            any_del = True
-                    if known:
-                        entry["has_dels"] = bool(any_del)
-                except (ValueError, TypeError):
-                    pass
-                # generalized zone maps: [min,max] for every top-level
-                # primitive column with complete, JSON-safe footer stats
-                # (the Iceberg manifest-entry column-bounds move) — powers
-                # read_range() file skipping on ANY such column, not just
-                # the key. Nested leaves (dotted paths) and non-JSON types
-                # (timestamps/bytes) are skipped conservatively.
-                cs: dict[str, list] = {}
-                for ci, cname in enumerate(md.schema.names):
-                    if cname in (self.key, META_DEL) or "." in cname:
-                        continue
-                    lo2 = hi2 = None
-                    ok = True
-                    for g in range(md.num_row_groups):
-                        st = md.row_group(g).column(ci).statistics
-                        if st is None or not st.has_min_max:
-                            ok = False
-                            break
-                        if lo2 is None or st.min < lo2:
-                            lo2 = st.min
-                        if hi2 is None or st.max > hi2:
-                            hi2 = st.max
-                    if (
-                        ok
-                        and isinstance(lo2, (str, int, float))
-                        and isinstance(hi2, (str, int, float))
-                        and not isinstance(lo2, bool)
-                    ):
-                        cs[cname] = [lo2, hi2]
-                if cs:
-                    entry["col_stats"] = cs
+                entry.update(self._footer_stats(md))
                 if kind == "delta":
                     entry["kind"] = "delta"
                     entry["seq"] = int(seq) if seq is not None else 0
@@ -1227,6 +1164,87 @@ class ManifestParquetTable:
         # clean staging
         self.fs.rmtree(staging)
         return entries
+
+    def _footer_stats(self, md) -> dict:
+        """Commit statistics of one written file, from one fold of its
+        parquet footer's row-group [min, max] per leaf column (driver-local
+        metadata read, no job). A leaf with any row group lacking min/max
+        is unknown and contributes nothing (conservative):
+
+        - ``min_key``/``max_key``: the key's zone map (string keys), which
+          ``lookup`` prunes by — selective after a sorted compaction, the
+          role of Iceberg's manifest-entry column bounds;
+        - ``has_dels``: max(_del); False proves the file all live rows,
+          which lets ``fast_count`` answer from metadata alone;
+        - ``col_stats``: [min, max] of every other leaf with JSON-safe
+          bounds (str/int/float; timestamps and bytes are skipped), which
+          ``read_where`` skips files by on ANY such column."""
+        first: dict[str, tuple | None] = {}
+        col_stats: dict[str, list] = {}
+        for ci, name in enumerate(md.schema.names):
+            stats = [
+                md.row_group(g).column(ci).statistics
+                for g in range(md.num_row_groups)
+            ]
+            b = None
+            if all(st is not None and st.has_min_max for st in stats):
+                b = (
+                    min((st.min for st in stats), default=None),
+                    max((st.max for st in stats), default=None),
+                )
+            first.setdefault(name, b)
+            if (
+                b is not None
+                and name not in (self.key, META_DEL)
+                and "." not in name
+                and all(isinstance(v, (str, int, float)) for v in b)
+                and not isinstance(b[0], bool)
+            ):
+                col_stats[name] = list(b)
+        out: dict = {}
+        lo, hi = first.get(self.key) or (None, None)
+        if isinstance(lo, str) and isinstance(hi, str):
+            out["min_key"], out["max_key"] = lo, hi
+        if first.get(META_DEL) is not None:
+            out["has_dels"] = bool(first[META_DEL][1])
+        if col_stats:
+            out["col_stats"] = col_stats
+        return out
+
+    def _rewrite(
+        self,
+        m: dict,
+        data: DataFrame,
+        keep: list[dict],
+        n_buckets: int | None = None,
+        kind: str = "base",
+        **layout,
+    ) -> dict:
+        """The one write-back sequence of every data-rewriting commit: take
+        the next snapshot of ``m``, write ``data`` (a frame carrying
+        ``_b``) as bucket-clustered data files (``kind="delta"`` stamps
+        them with the new snapshot's sequence number), and list the carried
+        ``keep`` entries — the same dict objects, so untouched bucket pages
+        are reused — followed by the written ones. ``n_buckets`` (rebucket)
+        writes under, and records, a new table modulus; ``layout`` passes
+        ``sort_cols``/``max_rows_per_file``/``drop_after_sort`` through to
+        ``_write_data_files``. Returns the uncommitted manifest; the caller
+        commits it through ``_commit`` (ledgered writes) or
+        ``_write_manifest`` (maintenance)."""
+        nxt = self._next_manifest(m)
+        if n_buckets is not None:
+            nxt["n_buckets"] = n_buckets
+        entries = self._write_data_files(
+            data,
+            nxt["snapshot_id"],
+            m["current_schema_version"],
+            n_buckets=n_buckets,
+            kind=kind,
+            seq=nxt["seq"],
+            **layout,
+        )
+        nxt["files"] = keep + entries
+        return nxt
 
     def _with_meta(self, df: DataFrame, schema: T.StructType) -> DataFrame:
         """Normalize to physical layout: logical columns + _lsn + _del."""
@@ -1310,11 +1328,7 @@ class ManifestParquetTable:
                     )
         try:
             data = data.withColumn("_b", self._bucket_expr(self.key))
-            nxt = self._next_manifest(m)
-            entries = self._write_data_files(
-                data, nxt["snapshot_id"], m["current_schema_version"]
-            )
-            nxt["files"] = m["files"] + entries
+            nxt = self._rewrite(m, data, m["files"])
             return self._commit(nxt, batch_id, int(df.count()))
         finally:
             if _pinned is not None:
@@ -1435,23 +1449,12 @@ class ManifestParquetTable:
             # footers (changes has one row per key by contract), so the
             # change frame is consumed exactly once even without a hint.
             try:
-                nxt = self._next_manifest(m)
                 _t0 = time.monotonic()
-                entries = self._write_data_files(
-                    ch,
-                    nxt["snapshot_id"],
-                    m["current_schema_version"],
-                    kind="delta",
-                    seq=nxt["seq"],
-                )
+                nxt = self._rewrite(m, ch, m["files"], kind="delta")
                 _tlog("merge.write_delta_files", _t0)
-                rows = (
-                    int(n_rows)
-                    if n_rows is not None
-                    else sum(fe["rows"] for fe in entries)
-                )
-                nxt["files"] = m["files"] + entries
-                return self._commit(nxt, batch_id, rows)
+                if n_rows is None:
+                    n_rows = sum(fe["rows"] for fe in nxt["files"][len(m["files"]) :])
+                return self._commit(nxt, batch_id, int(n_rows))
             finally:
                 if persisted:
                     ch.unpersist()
@@ -1515,60 +1518,49 @@ class ManifestParquetTable:
                 # first write into a fresh bucket) is append-shaped, the
                 # same shortcut Iceberg's MERGE planner takes.
                 new_data = ch.select(self.key, *data_cols, "_b")
-                nxt = self._next_manifest(m)
-                _t0 = time.monotonic()
-                entries = self._write_data_files(
-                    new_data, nxt["snapshot_id"], m["current_schema_version"]
+            else:
+                o = old_df.alias("o")
+                c = ch.select(*old_df.columns).alias("c")
+                o_key, c_key = F.col(f"o.{self.key}"), F.col(f"c.{self.key}")
+                o_v = F.coalesce(F.col(f"o.{META_LSN}"), F.lit(-1))
+                c_v = F.coalesce(F.col(f"c.{META_LSN}"), F.lit(-1))
+                o_d = F.coalesce(F.col(f"o.{META_DEL}"), F.lit(False)).cast("int")
+                c_d = F.coalesce(F.col(f"c.{META_DEL}"), F.lit(False)).cast("int")
+                change_wins = F.when(c_key.isNull(), F.lit(False)).otherwise(
+                    o_key.isNull()
+                    | (c_v > o_v)
+                    | ((c_v == o_v) & (c_d >= o_d))
                 )
-                _tlog("merge.write_data_files", _t0)
-                nxt["files"] = keep_entries + entries
-                return self._commit(nxt, batch_id, rows)
-            o = old_df.alias("o")
-            c = ch.select(*old_df.columns).alias("c")
-            o_key, c_key = F.col(f"o.{self.key}"), F.col(f"c.{self.key}")
-            o_v = F.coalesce(F.col(f"o.{META_LSN}"), F.lit(-1))
-            c_v = F.coalesce(F.col(f"c.{META_LSN}"), F.lit(-1))
-            o_d = F.coalesce(F.col(f"o.{META_DEL}"), F.lit(False)).cast("int")
-            c_d = F.coalesce(F.col(f"c.{META_DEL}"), F.lit(False)).cast("int")
-            change_wins = F.when(c_key.isNull(), F.lit(False)).otherwise(
-                o_key.isNull()
-                | (c_v > o_v)
-                | ((c_v == o_v) & (c_d >= o_d))
-            )
-            meta_cols = {META_LSN, META_DEL}
+                meta_cols = {META_LSN, META_DEL}
 
-            def _winning_value(col: str):
-                # patch: a winning non-delete change keeps the stored value
-                # for payload columns it left NULL; meta columns and
-                # tombstones always take the change side whole.
-                if update_semantics == "patch" and col not in meta_cols:
-                    return F.when(
-                        F.coalesce(F.col(f"c.{META_DEL}"), F.lit(False)),
-                        F.col(f"c.{col}"),
-                    ).otherwise(F.coalesce(F.col(f"c.{col}"), F.col(f"o.{col}")))
-                return F.col(f"c.{col}")
+                def _winning_value(col: str):
+                    # patch: a winning non-delete change keeps the stored
+                    # value for payload columns it left NULL; meta columns
+                    # and tombstones always take the change side whole.
+                    c_col, o_col = F.col(f"c.{col}"), F.col(f"o.{col}")
+                    if update_semantics == "patch" and col not in meta_cols:
+                        return F.when(
+                            F.coalesce(F.col(f"c.{META_DEL}"), F.lit(False)), c_col
+                        ).otherwise(F.coalesce(c_col, o_col))
+                    return c_col
 
-            new_data = (
-                o.join(c, o_key == c_key, "full_outer")
-                .select(
-                    F.coalesce(o_key, c_key).alias(self.key),
-                    *[
-                        F.when(change_wins, _winning_value(col))
-                        .otherwise(F.col(f"o.{col}"))
-                        .alias(col)
-                        for col in data_cols
-                    ],
+                new_data = (
+                    o.join(c, o_key == c_key, "full_outer")
+                    .select(
+                        F.coalesce(o_key, c_key).alias(self.key),
+                        *[
+                            F.when(change_wins, _winning_value(col))
+                            .otherwise(F.col(f"o.{col}"))
+                            .alias(col)
+                            for col in data_cols
+                        ],
+                    )
+                    .withColumn("_b", self._bucket_expr(self.key))
                 )
-                .withColumn("_b", self._bucket_expr(self.key))
-            )
 
-            nxt = self._next_manifest(m)
             _t0 = time.monotonic()
-            entries = self._write_data_files(
-                new_data, nxt["snapshot_id"], m["current_schema_version"]
-            )
+            nxt = self._rewrite(m, new_data, keep_entries)
             _tlog("merge.write_data_files", _t0)
-            nxt["files"] = keep_entries + entries
             return self._commit(nxt, batch_id, rows)
         finally:
             if persisted:
@@ -1712,6 +1704,11 @@ class ManifestParquetTable:
         return df
 
     # ---------- maintenance ----------
+    # compact, compact_buckets, materialize_deltas and rebucket are the
+    # rewrite_data_files family: each reads a resolved with-meta frame,
+    # applies the shared rules (_gc_tombstones, _prune_ledger_to) and
+    # writes back through _rewrite — the same snapshot-write sequence the
+    # merge, append and DML paths commit through.
     def compact(
         self,
         tombstone_horizon_lsn: int | None = None,
@@ -1727,11 +1724,13 @@ class ManifestParquetTable:
         - rewrite every bucket's live rows into one file per bucket (merges
           the per-commit file fragments a long CDC run accumulates);
         - garbage-collect delete tombstones with _lsn <= tombstone_horizon
-          (safe once no event at-or-below that LSN can ever be redelivered —
-          e.g. the streaming checkpoint's committed offset);
+          (``_gc_tombstones``: safe once no event at-or-below that LSN can
+          ever be redelivered — e.g. the streaming checkpoint's committed
+          offset);
         - optionally truncate the committed-batch ledger at-or-below
-          `ledger_horizon_batch_id` (same redelivery-safety rule — see
-          prune_ledger) so commit metadata stays O(live), not O(history);
+          `ledger_horizon_batch_id` in the same commit (``_prune_ledger_to``,
+          the rule ``prune_ledger`` commits on its own) so commit metadata
+          stays O(live), not O(history);
         - optionally expire old snapshot manifests (keep the newest K),
           freeing their exclusive data files and sweeping orphans;
         - optionally lay rows out sorted by `sort_cols` within each bucket
@@ -1743,14 +1742,10 @@ class ManifestParquetTable:
         """
         m = self._manifest()
         schema = self.schema()
-        df = self._read_resolved(m["files"], schema, with_meta=True)
-        if tombstone_horizon_lsn is not None:
-            df = df.filter(
-                ~(
-                    F.coalesce(F.col(META_DEL), F.lit(False))
-                    & (F.coalesce(F.col(META_LSN), F.lit(-1)) <= tombstone_horizon_lsn)
-                )
-            )
+        df = _gc_tombstones(
+            self._read_resolved(m["files"], schema, with_meta=True),
+            tombstone_horizon_lsn,
+        )
         drop_after_sort = None
         if zorder is not None:
             # OPTIMIZE ZORDER BY: lay rows out along a Morton curve over
@@ -1802,26 +1797,16 @@ class ManifestParquetTable:
             )
             sort_cols = ["_zkey"]
             drop_after_sort = ["_zkey"]
-        data = df.withColumn("_b", self._bucket_expr(self.key))
-        nxt = self._next_manifest(m)
-        entries = self._write_data_files(
-            data, nxt["snapshot_id"], m["current_schema_version"],
-            sort_cols=sort_cols, max_rows_per_file=max_rows_per_file,
+        nxt = self._rewrite(
+            m,
+            df.withColumn("_b", self._bucket_expr(self.key)),
+            [],
+            sort_cols=sort_cols,
+            max_rows_per_file=max_rows_per_file,
             drop_after_sort=drop_after_sort,
         )
-        nxt["files"] = entries
         if ledger_horizon_batch_id is not None:
-            nxt["committed"] = {
-                k: v
-                for k, v in nxt["committed"].items()
-                if int(k) > ledger_horizon_batch_id
-            }
-            prev_h = nxt.get("ledger_horizon")
-            nxt["ledger_horizon"] = (
-                max(ledger_horizon_batch_id, int(prev_h))
-                if prev_h is not None
-                else ledger_horizon_batch_id
-            )
+            _prune_ledger_to(nxt, ledger_horizon_batch_id)
         self._write_manifest(nxt)
         if expire_snapshots_keep is not None:
             self.expire_snapshots(keep=expire_snapshots_keep)
@@ -1857,11 +1842,7 @@ class ManifestParquetTable:
         df = self._read_resolved(target, schema, with_meta=True).withColumn(
             "_b", self._bucket_expr(self.key)
         )
-        nxt = self._next_manifest(m)
-        entries = self._write_data_files(
-            df, nxt["snapshot_id"], m["current_schema_version"]
-        )
-        nxt["files"] = keep + entries
+        nxt = self._rewrite(m, df, keep)
         self._write_manifest(nxt)
         return CommitInfo(nxt["snapshot_id"], None, -1)
 
@@ -1875,8 +1856,8 @@ class ManifestParquetTable:
         O(selected buckets), not O(table). The small-file answer for a
         long CDC run: drive it from a file-count trigger (see
         CdcEngine.auto_compact_files) instead of scheduling full
-        compact()s. Optionally GCs tombstones at/below the horizon, same
-        safety rule as compact()."""
+        compact()s. Optionally GCs tombstones at/below the horizon
+        (``_gc_tombstones``, the rule compact() applies)."""
         m = self._manifest()
         nb = int(m["n_buckets"])
         sel = {int(b) for b in buckets}
@@ -1886,24 +1867,11 @@ class ManifestParquetTable:
         target, keep = _closure_split(m["files"], _bucket_zones(sel, nb), nb)
         if not target:
             return CommitInfo(m["snapshot_id"], None, 0, skipped=True)
-        schema = self.schema()
-        df = self._read_resolved(target, schema, with_meta=True)
-        if tombstone_horizon_lsn is not None:
-            df = df.filter(
-                ~(
-                    F.coalesce(F.col(META_DEL), F.lit(False))
-                    & (
-                        F.coalesce(F.col(META_LSN), F.lit(-1))
-                        <= tombstone_horizon_lsn
-                    )
-                )
-            )
-        data = df.withColumn("_b", self._bucket_expr(self.key))
-        nxt = self._next_manifest(m)
-        entries = self._write_data_files(
-            data, nxt["snapshot_id"], m["current_schema_version"]
+        df = _gc_tombstones(
+            self._read_resolved(target, self.schema(), with_meta=True),
+            tombstone_horizon_lsn,
         )
-        nxt["files"] = keep + entries
+        nxt = self._rewrite(m, df.withColumn("_b", self._bucket_expr(self.key)), keep)
         self._write_manifest(nxt)
         return CommitInfo(nxt["snapshot_id"], None, -1)
 
@@ -1946,15 +1914,7 @@ class ManifestParquetTable:
                 rows = int(matched.count())
                 if rows == 0:
                     return CommitInfo(m["snapshot_id"], batch_id, 0, skipped=True)
-                nxt = self._next_manifest(m)
-                entries = self._write_data_files(
-                    matched,
-                    nxt["snapshot_id"],
-                    m["current_schema_version"],
-                    kind="delta",
-                    seq=nxt["seq"],
-                )
-                nxt["files"] = m["files"] + entries
+                nxt = self._rewrite(m, matched, m["files"], kind="delta")
                 return self._commit(nxt, batch_id, rows)
             finally:
                 matched.unpersist()
@@ -1974,12 +1934,7 @@ class ManifestParquetTable:
         post = transform(
             self._read_resolved(old_entries, schema, with_meta=True)
         ).withColumn("_b", self._bucket_expr(self.key))
-        nxt = self._next_manifest(m)
-        entries = self._write_data_files(
-            post, nxt["snapshot_id"], m["current_schema_version"]
-        )
-        nxt["files"] = keep_entries + entries
-        return self._commit(nxt, batch_id, rows)
+        return self._commit(self._rewrite(m, post, keep_entries), batch_id, rows)
 
     def delete_where(
         self,
@@ -2733,18 +2688,13 @@ class ManifestParquetTable:
         m = self._manifest()
         if new_n_buckets == int(m["n_buckets"]):
             return CommitInfo(m["snapshot_id"], None, 0, skipped=True)
-        schema = self.schema()
-        df = self._read_resolved(m["files"], schema, with_meta=True)
-        data = df.withColumn(
-            "_b", self._bucket_expr(self.key, n_buckets=new_n_buckets)
-        )
-        nxt = self._next_manifest(m)
-        nxt["n_buckets"] = new_n_buckets
-        entries = self._write_data_files(
-            data, nxt["snapshot_id"], m["current_schema_version"],
+        df = self._read_resolved(m["files"], self.schema(), with_meta=True)
+        nxt = self._rewrite(
+            m,
+            df.withColumn("_b", self._bucket_expr(self.key, n_buckets=new_n_buckets)),
+            [],
             n_buckets=new_n_buckets,
         )
-        nxt["files"] = entries
         self._write_manifest(nxt)
         return CommitInfo(nxt["snapshot_id"], None, -1)
 
@@ -2770,16 +2720,7 @@ class ManifestParquetTable:
         on-disk entry without ``"nb"`` defaults to its ROOT's modulus at
         load, which this commit changes). Cost: O(existing files) metadata,
         after which untouched buckets share pages again."""
-        f = int(factor)
-        if f < 2 or f != factor:
-            raise ValueError(f"split factor must be an integer >= 2, got {factor!r}")
-        m = self._manifest()
-        old_nb = int(m["n_buckets"])
-        nxt = self._next_manifest(m)
-        nxt["n_buckets"] = old_nb * f
-        nxt["files"] = [dict(fe, nb=_entry_nb(fe, old_nb)) for fe in m["files"]]
-        self._write_manifest(nxt)
-        return CommitInfo(nxt["snapshot_id"], None, 0)
+        return self._change_modulus("split", factor)
 
     def merge_buckets(self, factor: int = 2) -> CommitInfo:
         """Inverse of ``split_buckets``: DIVIDE ``n_buckets`` by an integer
@@ -2793,19 +2734,25 @@ class ManifestParquetTable:
         are not mutually divisible (e.g. {8, 12} over a base of 4) — zone
         matching degrades to conservative overlap there, never to a wrong
         prune."""
+        return self._change_modulus("merge", factor)
+
+    def _change_modulus(self, how: str, factor: int) -> CommitInfo:
+        """The metadata-only modulus commit of ``split_buckets`` (``how=
+        "split"``: multiply) and ``merge_buckets`` (``"merge"``: divide).
+        Every carried entry is stamped with its write-time modulus in a
+        fresh dict — the root modulus changes, so the on-disk default for
+        an entry without ``"nb"`` would change with it."""
         f = int(factor)
         if f < 2 or f != factor:
-            raise ValueError(f"merge factor must be an integer >= 2, got {factor!r}")
+            raise ValueError(f"{how} factor must be an integer >= 2, got {factor!r}")
         m = self._manifest()
         old_nb = int(m["n_buckets"])
-        if old_nb % f:
+        if how == "merge" and old_nb % f:
             raise ValueError(
                 f"merge factor {f} must divide the current bucket count {old_nb}"
             )
         nxt = self._next_manifest(m)
-        nxt["n_buckets"] = old_nb // f
-        # same identity-breaking stamp as split_buckets: the root modulus
-        # changes, so every carried entry must record its own explicitly
+        nxt["n_buckets"] = old_nb * f if how == "split" else old_nb // f
         nxt["files"] = [dict(fe, nb=_entry_nb(fe, old_nb)) for fe in m["files"]]
         self._write_manifest(nxt)
         return CommitInfo(nxt["snapshot_id"], None, 0)
@@ -2988,14 +2935,15 @@ class ManifestParquetTable:
         self, keep: int = 3, orphan_grace_sec: float = 3600.0
     ) -> int:
         """Drop all but the newest `keep` snapshot manifests, delete data
-        files referenced by no surviving snapshot, and sweep ORPHANS: files
-        in data/ referenced by no manifest at all (left behind by crashed
-        writes or OCC-conflicted commits whose manifest was abandoned).
-        Orphans younger than `orphan_grace_sec` are kept — an in-flight
-        commit renames its data files into data/ BEFORE publishing the
-        manifest, so a grace window (Iceberg's remove_orphan_files
-        `older_than` rule) is what makes the sweep safe to run while
-        writers are active. Returns files deleted."""
+        files referenced by no surviving snapshot, and sweep ORPHANS: data
+        files, bloom sidecars and bucket-manifest pages referenced by no
+        surviving root (left behind by crashed writes, OCC-conflicted
+        commits whose manifest was abandoned, or rewrites that dropped a
+        bloom pointer). Orphans younger than `orphan_grace_sec` are kept —
+        an in-flight commit renames its data files into data/ BEFORE
+        publishing the manifest, so a grace window (Iceberg's
+        remove_orphan_files `older_than` rule) is what makes the sweep safe
+        to run while writers are active. Returns data/ files deleted."""
         mdir = os.path.join(self.path, "manifests")
         manifests = []
         for fn in self.fs.listdir(mdir):
@@ -3029,21 +2977,35 @@ class ManifestParquetTable:
                 reachable.add(fn)
                 sid = man.get("parent")
         now = time.time()
+
+        def aged(p: str) -> bool:
+            # past the grace window; a file already gone counts as young
+            try:
+                return now - self.fs.getmtime(p) >= orphan_grace_sec
+            except FileNotFoundError:
+                return False
+
         live_chain = [t for t in manifests if t[0] in reachable]
         keep_set = {t[0] for t in live_chain[-keep:]} | pins
         keep_set.update(
             fn
             for fn, _ in manifests
-            if fn not in reachable
-            and now - self.fs.getmtime(os.path.join(mdir, fn)) < orphan_grace_sec
+            if fn not in reachable and not aged(os.path.join(mdir, fn))
         )
-        live_files: set[str] = set()
+        # basenames of everything a surviving root references: data and DV
+        # files, bloom sidecars and bucket-manifest pages
+        referenced: set[str] = set()
         for fn, man in manifests:
             if fn in keep_set:
-                live_files.update(fe["path"] for fe in man["files"])
-                live_files.update(
-                    fe["dv"]["path"] for fe in man["files"] if fe.get("dv")
+                referenced.update(
+                    name for name, _ in (man.get("_bm_cache") or {}).values()
                 )
+                for fe in man["files"]:
+                    referenced.add(os.path.basename(fe["path"]))
+                    if fe.get("dv"):
+                        referenced.add(os.path.basename(fe["dv"]["path"]))
+                    if fe.get("bloom"):
+                        referenced.add(os.path.basename(fe["bloom"]["file"]))
         deleted = 0
         for fn, man in manifests:
             if fn not in keep_set:
@@ -3053,74 +3015,38 @@ class ManifestParquetTable:
                     )
                     for rel in paths:
                         p = os.path.join(self.path, rel)
-                        if rel not in live_files and self.fs.exists(p):
+                        if os.path.basename(rel) not in referenced and self.fs.exists(p):
                             self.fs.remove(p)
                             deleted += 1
                 self.fs.remove(os.path.join(mdir, fn))
-        # orphan sweep: anything in data/ no surviving manifest references
-        referenced: set[str] = set()
-        for fn, man in manifests:
-            if fn in keep_set:
-                for fe in man["files"]:
-                    referenced.add(os.path.basename(fe["path"]))
-                    if fe.get("dv"):
-                        referenced.add(os.path.basename(fe["dv"]["path"]))
-        ddir = os.path.join(self.path, "data")
-        now = time.time()
-        for fn in self.fs.listdir(ddir):
-            if fn in referenced or not fn.endswith(".parquet"):
+        # orphan sweep, one grace window for every kind: data/DV files of
+        # crashed or OCC-losing writes, bloom sidecars whose data file (or
+        # pointer) left every retained snapshot, and content-addressed
+        # bm-*.json pages no surviving root names. The window is what keeps
+        # an in-flight commit safe: it publishes files and pages before
+        # swapping the pointer.
+        for sub, prefix, suffix in (
+            ("data", "", ".parquet"),
+            ("blooms", "", ".bloom"),
+            ("manifests", "bm-", ""),
+        ):
+            d = os.path.join(self.path, sub)
+            if not self.fs.exists(d):
                 continue
-            p = os.path.join(ddir, fn)
-            try:
-                if now - self.fs.getmtime(p) >= orphan_grace_sec:
-                    self.fs.remove(p)
-                    deleted += 1
-            except FileNotFoundError:
-                pass
-        # bloom-sidecar GC: a bloom blob is content-tied to one data file
-        # (blooms/<basename>.bloom); when the data file leaves every
-        # retained snapshot, the sidecar is an orphan too. Entries that
-        # merely DROPPED their pointer (compaction rewrote the entry)
-        # keep the blob only while some retained snapshot's entry still
-        # names it — same grace window as data files.
-        bdir = os.path.join(self.path, "blooms")
-        if self.fs.exists(bdir):
-            referenced_bl: set[str] = set()
-            for fn, man in manifests:
-                if fn in keep_set:
-                    referenced_bl.update(
-                        os.path.basename(fe["bloom"]["file"])
-                        for fe in man["files"]
-                        if fe.get("bloom")
-                    )
-            for fn in self.fs.listdir(bdir):
-                if fn in referenced_bl or not fn.endswith(".bloom"):
+            for fn in self.fs.listdir(d):
+                p = os.path.join(d, fn)
+                if (
+                    fn in referenced
+                    or not (fn.startswith(prefix) and fn.endswith(suffix))
+                    or not aged(p)
+                ):
                     continue
-                p = os.path.join(bdir, fn)
                 try:
-                    if now - self.fs.getmtime(p) >= orphan_grace_sec:
-                        self.fs.remove(p)
-                except FileNotFoundError:
-                    pass
-        # bucket-manifest GC: content-addressed bm-*.json pages referenced
-        # by no surviving root expire too; the same grace window protects
-        # an in-flight commit that wrote its pages but hasn't swapped the
-        # pointer yet
-        referenced_bm: set[str] = set()
-        for fn, man in manifests:
-            if fn in keep_set:
-                referenced_bm.update(
-                    name for name, _ in (man.get("_bm_cache") or {}).values()
-                )
-        for fn in self.fs.listdir(mdir):
-            if not fn.startswith("bm-") or fn in referenced_bm:
-                continue
-            p = os.path.join(mdir, fn)
-            try:
-                if now - self.fs.getmtime(p) >= orphan_grace_sec:
                     self.fs.remove(p)
-            except FileNotFoundError:
-                pass
+                except FileNotFoundError:
+                    continue
+                if sub == "data":
+                    deleted += 1
         return deleted
 
     def history(self) -> list[dict]:

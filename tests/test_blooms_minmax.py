@@ -187,6 +187,60 @@ def test_expire_snapshots_sweeps_orphan_bloom_sidecars(spark, tmp_path):
     assert t.lookup(["k1"]).collect()[0]["val"] == 1
 
 
+def test_expire_snapshots_grace_window_covers_every_orphan_kind(spark, tmp_path):
+    """Data files, bloom sidecars and bucket-manifest pages share one grace
+    window: a young orphan of any kind survives the sweep, and past the
+    window every remaining file is referenced by a surviving root."""
+    t = _mk(spark, tmp_path, mode="mor", n=100)
+    t.build_key_blooms()
+    t.merge(
+        spark.range(50, 150).select(
+            F.concat(F.lit("k"), F.col("id")).alias("doc_id"),
+            (F.col("id") * 10).alias("val"),
+            F.lit(2).alias("lsn"),
+        ),
+        batch_id=1,
+    )
+    t.compact()
+    t.build_key_blooms()
+    some = t._manifest()["files"][0]["path"]
+    t.fs.copy(os.path.join(t.path, some), os.path.join(t.path, "data", "orphan.parquet"))
+    t.fs.write_text(os.path.join(t.path, "manifests", "bm-orphan.json"), "[]")
+    want = sorted(t.read().collect())
+
+    def listing():
+        return {
+            "data": {f for f in t.fs.listdir(os.path.join(t.path, "data")) if f.endswith(".parquet")},
+            "blooms": {f for f in t.fs.listdir(os.path.join(t.path, "blooms")) if f.endswith(".bloom")},
+            "bm": {f for f in t.fs.listdir(os.path.join(t.path, "manifests")) if f.startswith("bm-")},
+        }
+
+    before = listing()
+    t.expire_snapshots(keep=1, orphan_grace_sec=3600)
+    young = listing()
+    assert "orphan.parquet" in young["data"]
+    assert young["blooms"] == before["blooms"]
+    assert young["bm"] == before["bm"]
+
+    t.expire_snapshots(keep=1, orphan_grace_sec=0.0)
+    referenced = {"data": set(), "blooms": set(), "bm": set()}
+    mdir = os.path.join(t.path, "manifests")
+    for fn in t.fs.listdir(mdir):
+        if fn.startswith("manifest-"):
+            man = t._load_manifest_file(os.path.join(mdir, fn))
+            referenced["bm"] |= {name for name, _ in man["_bm_cache"].values()}
+            for fe in man["files"]:
+                referenced["data"].add(os.path.basename(fe["path"]))
+                if fe.get("dv"):
+                    referenced["data"].add(os.path.basename(fe["dv"]["path"]))
+                if fe.get("bloom"):
+                    referenced["blooms"].add(os.path.basename(fe["bloom"]["file"]))
+    assert listing() == referenced
+    assert referenced["blooms"] and len(referenced["blooms"]) < len(before["blooms"])
+    assert sorted(t.read().collect()) == want
+    assert t.fsck()["ok"]
+
+
 def test_read_as_of_timestamp(spark, tmp_path):
     """AS-OF-timestamp resolution: strictly-monotonic committed_at_us
     makes same-second commits unambiguous; reads at each commit's stamp

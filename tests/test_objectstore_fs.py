@@ -65,6 +65,39 @@ def test_lifecycle_matches_posix(spark, tmp_path):
     assert m.skipped
 
 
+def _requeue_lifecycle(spark, root, fs):
+    from rap_etl_spark.engine import requeue_quarantine
+
+    t = ManifestParquetTable.create(spark, f"{root}/t", SCHEMA, n_buckets=4, fs=fs)
+    qdir = f"{root}/dlq"
+    eng = CdcEngine(spark, t, quarantine_dir=qdir)
+    m0 = eng.apply_batch(
+        events(
+            spark,
+            [("a", "I", 1, 10), ("b", "I", -2, 20), ("c", "X", 3, 30), ("a", "U", -4, 40)],
+        ),
+        batch_id=0,
+    )
+    assert m0.quarantined_rows == 3
+    m1 = requeue_quarantine(spark, eng, qdir, batch_id=100, fixes={"lsn": "abs(lsn)"})
+    assert m1 is not None and not m1.skipped and m1.applied_rows == 2
+    assert requeue_quarantine(spark, eng, qdir, batch_id=101) is None
+    assert not [e for e in os.listdir(t.path) if e.startswith("_staging")]
+    assert not [e for e in os.listdir(qdir) if e.startswith("_requeue-pending")]
+    assert os.path.exists(os.path.join(qdir, "batch=0", "_requeued-100"))
+    return t
+
+
+def test_requeue_lifecycle_matches_posix(spark, tmp_path):
+    """Quarantine, requeue-with-fix and a rerun under a new id: the requeue
+    bookkeeping (pending manifest, markers) goes through the table's
+    TableFS and lands the same state on both backends."""
+    t_posix = _requeue_lifecycle(spark, str(tmp_path / "posix"), PosixFS())
+    t_obj = _requeue_lifecycle(spark, str(tmp_path / "obj"), ObjectStoreFS())
+    assert {r["doc_id"]: r["val"] for r in t_obj.read().collect()} == {"a": 40, "b": 20}
+    assert_equivalent(t_posix.read(), t_obj.read(), payload_cols=["val"])
+
+
 def test_maintenance_and_time_travel(spark, tmp_path):
     t = _replay(spark, str(tmp_path / "t"), ObjectStoreFS())
     sid_before = t.snapshot_id()

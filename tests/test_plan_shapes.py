@@ -598,3 +598,51 @@ def test_ledger_written_in_one_place_and_engine_takes_one_table_type():
     engine = (pkg / "engine.py").read_text()
     assert "isinstance(self.table" not in engine and "tempfile" not in engine
     assert "hasattr(table" not in (pkg / "streaming" / "tail.py").read_text()
+
+
+def test_one_write_back_path_and_one_storage_seam():
+    """``ManifestParquetTable`` writes data back through one helper, folds
+    footer statistics once and ages orphans once; the engine's staging and
+    requeue I/O go through the table's ``TableFS``, with no second
+    filesystem seam in the package."""
+    import ast
+    import inspect
+    import pathlib
+
+    from rap_etl_spark import engine, lake
+
+    def scopes(node, needle, scope=()):
+        if isinstance(node, (ast.ClassDef, ast.FunctionDef)):
+            scope = (*scope, node.name)
+        if needle(node):
+            yield scope
+        for child in ast.iter_child_nodes(node):
+            yield from scopes(child, needle, scope)
+
+    tree = ast.parse(inspect.getsource(lake))
+
+    def method_call(name):
+        return lambda n: (
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and isinstance(n.func.value, ast.Name)
+            and n.func.value.id == "self"
+            and n.func.attr == name
+        )
+
+    assert sorted(scopes(tree, method_call("_write_data_files"))) == [
+        ("ManifestParquetTable", "_rewrite"),
+        ("ManifestParquetTable", "rewrite_deletion_vectors"),
+    ]
+    assert list(
+        scopes(tree, lambda n: isinstance(n, ast.Attribute) and n.attr == "has_min_max")
+    ) == [("ManifestParquetTable", "_footer_stats")]
+    src = inspect.getsource(lake.ManifestParquetTable.expire_snapshots)
+    assert src.count("getmtime(") == 1
+
+    pkg = pathlib.Path(lake.__file__).parent
+    for py in pkg.rglob("*.py"):
+        assert "hadoop_fs_" not in py.read_text(), py
+    requeue = inspect.getsource(engine.requeue_quarantine)
+    for raw in ("open(", "os.listdir", "os.replace", "os.remove"):
+        assert raw not in requeue, raw
