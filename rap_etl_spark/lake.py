@@ -292,6 +292,42 @@ def _fold_modulus(files: list[dict], default_nb: int) -> int:
     return lo
 
 
+def _change_sig(fe: dict) -> tuple:
+    """Change signature of a file entry: path + deletion-vector row count.
+    A DV delete touches NO paths (it only re-points fe["dv"]), so a
+    path-only signature would miss the rows it masks. The per-file DV
+    count is precise: a file's masked set only grows (folding unions
+    generations; unmasking requires a rewrite, which changes the path), so
+    count-unchanged ⇒ masked-set-unchanged even though folding re-points
+    every dv'd entry at a new DV file."""
+    return fe["path"], int((fe.get("dv") or {}).get("rows", 0))
+
+
+def _nested_leaf_names(m: dict) -> set[str]:
+    """Bare leaf names that a nested column of any of ``m``'s schema
+    versions writes into parquet (an array's ``element``, a map's
+    ``key``/``value``, a struct's field names). Entries written before
+    ``col_stats`` was keyed by column path may hold such a leaf's bounds
+    under that bare name, so a top-level column sharing it gets no
+    zone-map answer from ``col_stats``."""
+
+    def leaves(name: str, dt: T.DataType) -> set[str]:
+        if isinstance(dt, T.ArrayType):
+            return leaves("element", dt.elementType) | leaves("array", dt.elementType)
+        if isinstance(dt, T.MapType):
+            return leaves("key", dt.keyType) | leaves("value", dt.valueType)
+        if isinstance(dt, T.StructType):
+            return set().union(*(leaves(f.name, f.dataType) for f in dt.fields))
+        return {name}
+
+    out: set[str] = set()
+    for js in m["schema_versions"].values():
+        for f in _schema_from_json(js).fields:
+            if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType)):
+                out |= leaves(f.name, f.dataType)
+    return out
+
+
 def _gc_tombstones(df: DataFrame, horizon_lsn: int | None) -> DataFrame:
     """Drop delete tombstones with ``_lsn <= horizon_lsn`` from a resolved
     with-meta frame (None keeps them all). Safe once no event at-or-below
@@ -896,13 +932,18 @@ class ManifestParquetTable:
         files: list[dict],
         target_schema: T.StructType,
         with_meta: bool = False,
+        resolve: bool = True,
     ) -> DataFrame:
+        """Read ``files`` under snapshot ``m`` (its schema versions and
+        modulus). ``resolve`` stacks MoR deltas of the pinned snapshot into
+        one row per key (pure-CoW file lists pass through ``_read_files``
+        untouched either way); ``resolve=False`` reads every row of the
+        files as written."""
         saved = self._manifest_cache
         self._manifest_cache = m
+        read = self._read_resolved if resolve else self._read_files
         try:
-            # resolve MoR deltas of the pinned snapshot; pure-CoW file
-            # lists pass through _read_files untouched
-            return self._read_resolved(files, target_schema, with_meta=with_meta)
+            return read(files, target_schema, with_meta=with_meta)
         finally:
             self._manifest_cache = saved
 
@@ -978,19 +1019,8 @@ class ManifestParquetTable:
 
         old_b, new_b = by_bucket(m_from), by_bucket(m_to)
 
-        # Change signature per file entry: path + deletion-vector row count.
-        # A DV delete touches NO paths (it only re-points fe["dv"]), so a
-        # path-only signature would skip the bucket and the masked rows
-        # would never surface as 'delete' changes downstream. The per-file
-        # DV count is precise: a file's masked set only grows (folding
-        # unions generations; unmasking requires a rewrite, which changes
-        # the path), so count-unchanged ⇒ masked-set-unchanged even though
-        # folding re-points every dv'd entry at a new DV file.
         def sig(fes: list[dict]) -> list[tuple]:
-            return sorted(
-                (fe["path"], int((fe.get("dv") or {}).get("rows", 0)))
-                for fe in fes
-            )
+            return sorted(map(_change_sig, fes))
 
         changed = {
             b
@@ -1050,21 +1080,55 @@ class ManifestParquetTable:
             F.col("_c._change_lsn").alias("_change_lsn"),
         )
 
-    def changes_for_batch(self, batch_id: int) -> DataFrame:
-        """Changes introduced by one committed batch: diff of the batch's
-        commit snapshot against its parent (ledger lookup + table_changes).
-        Only available while the batch is in the un-pruned ledger AND both
-        snapshots are within retention."""
-        m = self._manifest()
-        entry = m["committed"].get(str(batch_id))
+    def _batch_commit(self, batch_id: int) -> dict:
+        """The manifest of the snapshot that committed ``batch_id``; raises
+        ValueError when the ledger no longer names it or the snapshot
+        was expired."""
+        entry = self._manifest()["committed"].get(str(batch_id))
         if entry is None:
             raise ValueError(
                 f"batch {batch_id} not in ledger (never committed, or pruned "
                 "below the ledger horizon)"
             )
-        sid = entry["snapshot_id"]
-        parent = self._manifest_of(sid).get("parent")
-        return self.table_changes(parent, sid)
+        return self._manifest_of(entry["snapshot_id"])
+
+    def changes_for_batch(self, batch_id: int) -> DataFrame:
+        """Changes introduced by one committed batch: diff of the batch's
+        commit snapshot against its parent (ledger lookup + table_changes).
+        Only available while the batch is in the un-pruned ledger AND both
+        snapshots are within retention."""
+        m = self._batch_commit(batch_id)
+        return self.table_changes(m.get("parent"), m["snapshot_id"])
+
+    def batch_delta_rows(self, batch_id: int) -> DataFrame | None:
+        """The rows of the delta files one batch's commit appended, when
+        appending delta files is all that commit did — every MoR ``merge``
+        and MoR DML commit. Returns None for any other commit (a CoW
+        rewrite, a DV delete, an append), whose change set only a snapshot
+        diff recovers (``changes_for_batch``).
+
+        Rows come as written, with ``_lsn`` and ``_del``: one per key the
+        commit staged, including rows that lose to a stored newer version
+        at read time and identical re-upserts. The read is of the commit
+        snapshot's own entries, so a later DV delete, materialization or
+        compaction does not change it. Same availability as
+        ``changes_for_batch``: ValueError once the ledger entry is pruned
+        or either snapshot is expired."""
+        m = self._batch_commit(batch_id)
+        parent = m.get("parent")
+        before = {
+            _change_sig(fe)
+            for fe in (self._manifest_of(parent)["files"] if parent else [])
+        }
+        if not before <= {_change_sig(fe) for fe in m["files"]}:
+            return None
+        added = [fe for fe in m["files"] if _change_sig(fe) not in before]
+        if any(fe.get("kind") != "delta" for fe in added):
+            return None
+        schema = _schema_from_json(
+            m["schema_versions"][str(m["current_schema_version"])]
+        )
+        return self._read_files_of(m, added, schema, with_meta=True, resolve=False)
 
     # ---------- write path ----------
     def _bucket_expr(self, col: str, n_buckets: int | None = None):
@@ -1167,46 +1231,48 @@ class ManifestParquetTable:
 
     def _footer_stats(self, md) -> dict:
         """Commit statistics of one written file, from one fold of its
-        parquet footer's row-group [min, max] per leaf column (driver-local
-        metadata read, no job). A leaf with any row group lacking min/max
-        is unknown and contributes nothing (conservative):
+        parquet footer's row-group [min, max] per TOP-LEVEL primitive
+        column (driver-local metadata read, no job). Leaves are keyed by
+        their parquet column path, so a nested leaf (``tokens.list.element``)
+        never lands under a top-level column's name; nested leaves are not
+        recorded at all. A column with any row group lacking min/max is
+        unknown and contributes nothing (conservative):
 
         - ``min_key``/``max_key``: the key's zone map (string keys), which
           ``lookup`` prunes by — selective after a sorted compaction, the
           role of Iceberg's manifest-entry column bounds;
         - ``has_dels``: max(_del); False proves the file all live rows,
           which lets ``fast_count`` answer from metadata alone;
-        - ``col_stats``: [min, max] of every other leaf with JSON-safe
-          bounds (str/int/float; timestamps and bytes are skipped), which
-          ``read_where`` skips files by on ANY such column."""
-        first: dict[str, tuple | None] = {}
-        col_stats: dict[str, list] = {}
-        for ci, name in enumerate(md.schema.names):
+        - ``col_stats``: [min, max] of every other such column with
+          JSON-safe bounds (str/int/float; timestamps and bytes are
+          skipped), which ``read_where`` skips files by."""
+        top: dict[str, tuple] = {}
+        for ci in range(md.num_columns):
+            col = md.schema.column(ci)
+            if col.path != col.name:  # a leaf inside a nested column
+                continue
             stats = [
                 md.row_group(g).column(ci).statistics
                 for g in range(md.num_row_groups)
             ]
-            b = None
             if all(st is not None and st.has_min_max for st in stats):
-                b = (
+                top[col.path] = (
                     min((st.min for st in stats), default=None),
                     max((st.max for st in stats), default=None),
                 )
-            first.setdefault(name, b)
-            if (
-                b is not None
-                and name not in (self.key, META_DEL)
-                and "." not in name
-                and all(isinstance(v, (str, int, float)) for v in b)
-                and not isinstance(b[0], bool)
-            ):
-                col_stats[name] = list(b)
         out: dict = {}
-        lo, hi = first.get(self.key) or (None, None)
+        lo, hi = top.get(self.key) or (None, None)
         if isinstance(lo, str) and isinstance(hi, str):
             out["min_key"], out["max_key"] = lo, hi
-        if first.get(META_DEL) is not None:
-            out["has_dels"] = bool(first[META_DEL][1])
+        if META_DEL in top:
+            out["has_dels"] = bool(top[META_DEL][1])
+        col_stats = {
+            path: list(b)
+            for path, b in top.items()
+            if path not in (self.key, META_DEL)
+            and all(isinstance(v, (str, int, float)) for v in b)
+            and not isinstance(b[0], bool)
+        }
         if col_stats:
             out["col_stats"] = col_stats
         return out
@@ -1646,7 +1712,9 @@ class ManifestParquetTable:
         contiguous ranges, a narrow range touches one file per bucket.
         Merge-on-read buckets are pruned at BUCKET granularity (delta
         resolution needs the bucket's full file stack); files without
-        stats are conservatively read. The residual filter still applies,
+        stats are conservatively read, and so is every file for a column
+        that shares its name with a nested column's leaf
+        (``_nested_leaf_names``). The residual filter still applies,
         so the result is exact regardless of stats coverage."""
         m = self._manifest()
         files = m["files"]
@@ -1658,10 +1726,13 @@ class ManifestParquetTable:
         dirty_files, _ = _delta_zones(files, nb).split(files, nb)
         dirty_paths = {fe["path"] for fe in dirty_files}
         fold = _fold_modulus(dirty_files, nb) if dirty_files else nb
+        shadowed = _nested_leaf_names(m)
 
         def bounds(fe, col):
             if col == self.key:
                 return fe.get("min_key"), fe.get("max_key")
+            if col in shadowed:
+                return None, None
             cs = fe.get("col_stats", {}).get(col)
             return (cs[0], cs[1]) if cs else (None, None)
 
@@ -3233,9 +3304,10 @@ class ManifestParquetTable:
         deltas whose superseded base rows would poison the extremes, no
         tombstones, no deletion vectors — a masked row might BE the max)
         and every requested column to carry complete NUMERIC footer
-        stats. String stats are excluded on purpose: parquet writers may
-        truncate string min/max, which is fine for pruning (conservative)
-        but not for an exact answer. Anything unprovable falls back to
+        stats under a name no nested column's leaf shares
+        (``_nested_leaf_names``). String stats are excluded on purpose:
+        parquet writers may truncate string min/max, which is fine for
+        pruning (conservative) but not for an exact answer. Anything unprovable falls back to
         one aggregate over the resolved read — still exact, never wrong.
 
         Returns ({col: (min, max)}, metadata_only)."""
@@ -3249,7 +3321,10 @@ class ManifestParquetTable:
         )
         if clean:
             vals: dict[str, tuple] = {}
+            shadowed = _nested_leaf_names(m)
             for c in cols:
+                if c in shadowed:
+                    break
                 lo = hi = None
                 for fe in files:
                     cs = fe.get("col_stats", {}).get(c)

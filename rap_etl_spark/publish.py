@@ -6,22 +6,31 @@ description is BASELINE.json's north_star: "generalizes rap-etl's
 add/remove graph-diff publishing model (its sync-to-VIVO delta
 computation per publication record)").
 
-After a batch commits, its row-level changefeed (`changes_for_batch`,
-the bucket-pruned manifest diff) is published to a per-batch leaf under a
-downstream log directory. Exactly-once by construction:
+After a batch commits, its events (`batch_events`) are published to a
+per-batch leaf under a downstream log directory. A commit that only
+appended delta files — every merge-on-read merge and MoR DML commit —
+publishes those files' rows: one scan and projection sized by the batch,
+the way Delta Lake's change-data files and Iceberg's incremental read
+serve a commit's own files. Every other commit (a copy-on-write rewrite,
+a deletion-vector delete, an append) publishes the bucket-pruned manifest
+diff of its snapshot against the parent (`changes_for_batch`).
+Exactly-once by construction:
 
 - the leaf is named by batch_id, written to a temp dir, and ATOMICALLY
   renamed into place — readers never see a partial publish;
 - republishing an already-published batch is a no-op (the rename target
   exists), so redelivered batches cannot double-publish;
 - a crash between table-commit and publish is repaired by re-running
-  publish for the committed batch (the ledger knows it; the changefeed is
+  publish for the committed batch (the ledger knows it; both feeds are
   derived from immutable snapshots, so the retry emits identical rows).
 
 A downstream consumer replays the published deltas in batch order into
-its own table (`changes_to_events` + merge) and converges to the source
-state — the sync-to-downstream contract, driven end-to-end in
-tests/test_publish.py.
+its own table (`apply_published`) and converges to the source state — the
+sync-to-downstream contract, driven end-to-end in tests/test_publish.py.
+A MoR batch's leaf also carries rows that lost to a stored newer version
+and identical re-upserts; the downstream merge applies the same
+version-conditional rule the source resolved them by, so they change
+nothing there either.
 """
 
 from __future__ import annotations
@@ -32,7 +41,7 @@ import uuid
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from rap_etl_spark.lake import ManifestParquetTable
+from rap_etl_spark.lake import META_DEL, META_LSN, ManifestParquetTable
 
 
 def changes_to_events(changes: DataFrame, lsn_col: str = "_change_lsn") -> DataFrame:
@@ -49,6 +58,31 @@ def changes_to_events(changes: DataFrame, lsn_col: str = "_change_lsn") -> DataF
         )
         .withColumn("lsn", F.coalesce(F.col(lsn_col), F.lit(0)))
         .drop("_change_type", "_change_lsn")
+    )
+
+
+def batch_events(table: ManifestParquetTable, batch_id: int) -> DataFrame:
+    """One committed batch as CDC events ``(key, payload..., op, lsn)``.
+
+    A commit that only appended delta files yields those files' rows
+    (``batch_delta_rows``): ``op`` is 'D' for a tombstone, whose payload
+    is NULL like the table's own tombstones, and 'U' otherwise, with
+    ``lsn`` the row's ``_lsn``. Any other commit yields its snapshot diff
+    through ``changes_to_events``. Both raise ValueError once the batch's
+    snapshots are out of retention."""
+    rows = table.batch_delta_rows(batch_id)
+    if rows is None:
+        return changes_to_events(table.changes_for_batch(batch_id))
+    dead = F.col(META_DEL)
+    return rows.select(
+        table.key,
+        *[
+            F.when(~dead, F.col(c)).alias(c)
+            for c in rows.columns
+            if c not in (table.key, META_LSN, META_DEL)
+        ],
+        F.when(dead, F.lit("D")).otherwise(F.lit("U")).alias("op"),
+        F.coalesce(F.col(META_LSN), F.lit(0)).alias("lsn"),
     )
 
 
@@ -95,19 +129,26 @@ def publish_changes(
     out_dir: str,
     fmt: str = "parquet",
 ) -> dict:
-    """Publish one committed batch's delta to `out_dir/batch=<id>`.
+    """Publish one committed batch's events (``batch_events``) to
+    `out_dir/batch=<id>`.
 
-    Returns {"batch_id", "published", "rows"} — published=False when the
-    leaf already exists (idempotent redelivery). `fmt="binlog"` writes a
-    `.rapwal` segment dir via the custom DataSource instead of parquet —
-    same atomic-rename publish either way."""
+    A commit that only appended delta files (MoR merges and MoR DML)
+    publishes the rows of those files, with NULL payloads on deletes, so
+    its ``rows`` equals the ledger's ``event_count``; every other commit
+    publishes its snapshot diff (post-images and deletes with their
+    pre-image payload). Returns {"batch_id", "published", "rows"} —
+    published=False when the leaf already exists (idempotent redelivery),
+    plus "error" when the batch's snapshots are out of retention.
+    `fmt="binlog"` writes a `.rapwal` segment dir via the custom
+    DataSource instead of parquet — same atomic-rename publish either
+    way."""
     if fmt not in ("parquet", "binlog"):
         raise ValueError(f"fmt must be 'parquet' or 'binlog', got {fmt!r}")
     dest = os.path.join(out_dir, f"batch={batch_id}")
     if os.path.exists(dest):
         return {"batch_id": batch_id, "published": False, "rows": 0}
     try:
-        ev = changes_to_events(table.changes_for_batch(batch_id))
+        ev = batch_events(table, batch_id)
     except ValueError as e:
         # retention contract: the batch's snapshot pair was expired (or the
         # ledger pruned) before this publish ran — unrecoverable from this

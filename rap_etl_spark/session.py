@@ -14,6 +14,24 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory(phys_bytes: int | None = None) -> str:
+    """Local-mode driver heap: ``$SPARK_GRAFT_DRIVER_MEM`` when set, else
+    the smaller of 24g and a third of the host's physical memory (in MB,
+    at least 1g). In local mode the driver heap holds every task's working
+    set, and a 24g heap on a 16 GB host lets the JVM grow until the host
+    runs out of memory. ``phys_bytes`` stands in for the host's memory
+    (read from ``os.sysconf``); 24g when it cannot be read."""
+    explicit = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if explicit:
+        return explicit
+    if phys_bytes is None:
+        try:
+            phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (AttributeError, OSError, ValueError):
+            return "24g"
+    return f"{max(1024, min(24 * 1024, phys_bytes // 3 // 2**20))}m"
+
+
 def get_spark(
     app_name: str = "rap-etl-spark",
     cpus: int | None = None,
@@ -69,7 +87,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory())
         # ParallelGC: the token-array payloads allocate heavily in scans and
         # aggregations; G1 at high thread counts spent more time pacing than
         # collecting here (measured 2-4x slowdowns at local[32]).
@@ -111,7 +129,7 @@ def get_spark(
                 "spark.executor.extraJavaOptions",
                 os.environ.get("SPARK_GRAFT_JAVA_OPTS_EXECUTOR", "-XX:+UseG1GC"),
             )
-            # multi-JVM mode needs no 24g driver heap — executors hold the data
+            # multi-JVM mode needs no host-sized driver heap — executors hold the data
             .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM_LC", "8g"))
         )
     for k, v in (extra_conf or {}).items():

@@ -646,3 +646,53 @@ def test_one_write_back_path_and_one_storage_seam():
     requeue = inspect.getsource(engine.requeue_quarantine)
     for raw in ("open(", "os.listdir", "os.replace", "os.remove"):
         assert raw not in requeue, raw
+
+
+def test_mor_batch_events_plan_is_scan_and_project(spark, tmp_path):
+    """A MoR batch publishes the delta files its commit wrote: the events
+    frame plans as a scan and a projection, with no join, aggregate or
+    exchange (the snapshot diff it replaces joins both sides of every
+    touched bucket). ``publish.py`` reaches that diff, through
+    ``changes_for_batch``, from ``batch_events`` only."""
+    import ast
+    import inspect
+
+    from pyspark.sql import types as T
+
+    from rap_etl_spark import publish
+    from rap_etl_spark.lake import ManifestParquetTable
+
+    schema = T.StructType(
+        [T.StructField("doc_id", T.StringType()), T.StructField("v", T.LongType())]
+    )
+    t = ManifestParquetTable.create(
+        spark, str(tmp_path / "t"), schema, n_buckets=2, merge_mode="mor"
+    )
+    for b in (0, 1):
+        t.merge(
+            spark.range(20).select(
+                F.concat(F.lit("k"), F.col("id")).alias("doc_id"),
+                F.lit("D" if b else "U").alias("op"),
+                (F.col("id") + 100 * b).alias("lsn"),
+                F.col("id").alias("v"),
+            ),
+            batch_id=b,
+        )
+    df = publish.batch_events(t, 1)
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    for node in ("Join", "Aggregate", "Repartition"):
+        assert node not in optimized, optimized
+    plan = formatted_plan(df)
+    assert "Exchange" not in plan and "Join" not in plan, plan
+    # deletes carry a NULL payload, like the table's own tombstones
+    assert df.filter((F.col("op") == "D") & F.col("v").isNull()).count() == 20
+
+    def scopes(node, scope=()):
+        if isinstance(node, ast.FunctionDef):
+            scope = (*scope, node.name)
+        if isinstance(node, ast.Attribute) and node.attr == "changes_for_batch":
+            yield scope
+        for child in ast.iter_child_nodes(node):
+            yield from scopes(child, scope)
+
+    assert list(scopes(ast.parse(inspect.getsource(publish)))) == [("batch_events",)]

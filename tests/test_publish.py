@@ -3,12 +3,14 @@ publish + downstream replay convergence — the engine's generalization of
 the reference's add/remove diff-publishing (sync-to-downstream) model."""
 
 import os
+import shutil
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rap_etl_spark.lake import ManifestParquetTable
-from rap_etl_spark.publish import apply_published, publish_changes
+from rap_etl_spark.publish import apply_published, batch_events, publish_changes
 
 SCHEMA = T.StructType(
     [
@@ -19,8 +21,10 @@ SCHEMA = T.StructType(
 )
 
 
-def mk(spark, path):
-    return ManifestParquetTable.create(spark, path, SCHEMA, n_buckets=4)
+def mk(spark, path, mode="cow"):
+    return ManifestParquetTable.create(
+        spark, path, SCHEMA, n_buckets=4, merge_mode=mode
+    )
 
 
 def ch(spark, rows):
@@ -38,8 +42,9 @@ def _drive(spark, t):
     )
 
 
-def test_publish_and_converge(spark, tmp_path):
-    t = mk(spark, str(tmp_path / "src"))
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_publish_and_converge(spark, tmp_path, mode):
+    t = mk(spark, str(tmp_path / "src"), mode)
     _drive(spark, t)
     log = str(tmp_path / "feed")
     for b in (0, 1):
@@ -62,11 +67,12 @@ def test_publish_and_converge(spark, tmp_path):
     assert all(r["skipped"] for r in res)
 
 
-def test_publish_repairs_after_partial(spark, tmp_path):
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_publish_repairs_after_partial(spark, tmp_path, mode):
     """Crash between commit and publish: re-running publish for the
     committed batch emits identical rows (derived from immutable
     snapshots), completing the downstream feed."""
-    t = mk(spark, str(tmp_path / "src"))
+    t = mk(spark, str(tmp_path / "src"), mode)
     _drive(spark, t)
     log = str(tmp_path / "feed")
     publish_changes(t, 0, log)  # batch 1's publish "crashed"
@@ -107,6 +113,140 @@ def test_publish_rows_match_the_written_leaf(spark, tmp_path, monkeypatch, obser
         assert _leaf_rows(spark, f"{log}/batch={b}") == n
 
 
+def test_publish_rows_of_a_mor_reupsert_is_its_delta_row(spark, tmp_path):
+    """The MoR twin of the CoW ``(2, 0)`` case above: an identical
+    re-upsert still commits one delta row, and a MoR batch publishes the
+    delta files its commit wrote, so the leaf carries that row (the
+    downstream merge's version rule makes it a no-op there). ``rows``
+    equals the ledger's ``event_count`` and the leaf's read-back count."""
+    t = mk(spark, str(tmp_path / "src"), "mor")
+    _drive(spark, t)
+    t.merge(ch(spark, [("a", "U", 3, 11, "w")]), batch_id=2)
+    log = str(tmp_path / "feed")
+    rec = publish_changes(t, 2, log)
+    assert rec["published"] and rec["rows"] == 1
+    assert t.committed_batches()["2"]["event_count"] == 1
+    assert _leaf_rows(spark, f"{log}/batch=2") == 1
+
+
+def _basenames(paths):
+    return sorted(os.path.basename(p) for p in paths)
+
+
+@pytest.mark.parametrize("seeded", [2_000, 40_000])
+def test_mor_batch_events_read_only_the_commits_delta_files(spark, tmp_path, seeded):
+    """A MoR batch's events come from exactly the delta files its commit
+    wrote: the same 200-key batch reads the same files, whatever the table
+    size, and not the base files of the buckets it touched."""
+    t = mk(spark, str(tmp_path / "src"), "mor")
+    t.merge(
+        spark.range(seeded).select(
+            F.format_string("k%06d", "id").alias("doc_id"),
+            F.lit("U").alias("op"),
+            F.col("id").alias("lsn"),
+            F.col("id").alias("val"),
+            F.lit("s").alias("src"),
+        ),
+        batch_id=0,
+    )
+    t.materialize_deltas()
+    before = {fe["path"] for fe in t._manifest()["files"]}
+    t.merge(
+        spark.range(0, 2_000, 10).select(
+            F.format_string("k%06d", "id").alias("doc_id"),
+            F.lit("U").alias("op"),
+            (F.col("id") + seeded).alias("lsn"),
+            (F.col("id") + 1).alias("val"),
+            F.lit("t").alias("src"),
+        ),
+        batch_id=1,
+    )
+    written = [fe for fe in t._manifest()["files"] if fe["path"] not in before]
+    assert written and all(fe["kind"] == "delta" for fe in written)
+    ev = batch_events(t, 1)
+    assert _basenames(ev.inputFiles()) == _basenames(fe["path"] for fe in written)
+    assert ev.columns == ["doc_id", "val", "src", "op", "lsn"]
+    assert ev.count() == 200 == t.committed_batches()["1"]["event_count"]
+
+
+def _state(t):
+    return sorted((r["doc_id"], r["val"], r["src"]) for r in t.read().collect())
+
+
+def _leaf(spark, path):
+    return sorted(
+        tuple(r) for r in spark.read.parquet(path).select(
+            "doc_id", "val", "src", "op", "lsn"
+        ).collect()
+    )
+
+
+def test_mor_feed_converges_through_late_events_and_maintenance(spark, tmp_path):
+    """A MoR source's feed carries every row its delta commits wrote: a
+    late event below the stored version, a delete of an absent key and an
+    identical re-upsert included. CoW and MoR downstreams apply them with
+    the same version-conditional rule the source resolves them by, so both
+    converge to the source through DV deletes, ``materialize_deltas`` and
+    ``expire_snapshots``. A re-publish after the batch's delta files were
+    DV-masked and materialized emits the same rows."""
+    src = mk(spark, str(tmp_path / "src"), "mor")
+    feed = str(tmp_path / "feed")
+    delta_batches = []
+
+    def pub(b, delta=False):
+        rec = publish_changes(src, b, feed)
+        assert rec["published"], rec
+        if delta:
+            delta_batches.append(b)
+            assert rec["rows"] == src.committed_batches()[str(b)]["event_count"]
+            assert rec["rows"] == _leaf_rows(spark, f"{feed}/batch={b}")
+        return rec
+
+    src.merge(
+        ch(spark, [(k, "U", 10 + i, i + 1, "w") for i, k in enumerate("abcde")]),
+        batch_id=0,
+    )
+    pub(0, delta=True)
+    src.merge(
+        ch(spark, [
+            ("a", "U", 5, 99, "late"),  # below the stored lsn 10: loses
+            ("zz", "D", 20, None, None),  # delete of an absent key
+            ("b", "U", 11, 2, "w"),  # identical re-upsert
+            ("c", "U", 21, 31, "w"),
+        ]),
+        batch_id=1,
+    )
+    assert pub(1, delta=True)["rows"] == 4
+    src.delete_where("val = 4", mode="dv", batch_id=2)  # kills d
+    pub(2)
+    src.materialize_deltas()
+    src.expire_snapshots(keep=2, orphan_grace_sec=0)
+    src.merge(
+        ch(spark, [("e", "D", 30, None, None), ("f", "U", 31, 60, "x"),
+                   ("a", "U", 32, 100, "x")]),
+        batch_id=3,
+    )
+    pub(3, delta=True)
+    src.update_where("val >= 60", {"src": "'y'"}, mode="mor", batch_id=4)
+    pub(4, delta=True)
+    src.delete_where("val = 100", mode="dv", batch_id=5)  # kills a
+    pub(5)
+    src.materialize_deltas()
+    assert delta_batches == [0, 1, 3, 4]
+
+    first = _leaf(spark, f"{feed}/batch=3")
+    shutil.rmtree(f"{feed}/batch=3")
+    assert publish_changes(src, 3, feed)["rows"] == 3
+    assert _leaf(spark, f"{feed}/batch=3") == first
+
+    want = _state(src)
+    assert want == [("b", 2, "w"), ("c", 31, "w"), ("f", 60, "y")]
+    for mode in ("cow", "mor"):
+        down = mk(spark, str(tmp_path / f"down-{mode}"), mode)
+        apply_published(down, feed)
+        assert _state(down) == want, mode
+
+
 def test_publish_unknown_batch_reported_not_raised(spark, tmp_path):
     t = mk(spark, str(tmp_path / "src"))
     rec = publish_changes(t, 9, str(tmp_path / "feed"))
@@ -115,13 +255,14 @@ def test_publish_unknown_batch_reported_not_raised(spark, tmp_path):
         publish_changes(t, 0, str(tmp_path / "feed"), fmt="bogus")
 
 
-def test_publish_binlog_roundtrip(spark, tmp_path):
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_publish_binlog_roundtrip(spark, tmp_path, mode):
     """Tokenized-sequence shape over the .rapwal wire: publish binlog
     segments, downstream consumes them to the same state."""
     from rap_etl_spark.schemas import DOCS_SCHEMA
 
     t = ManifestParquetTable.create(
-        spark, str(tmp_path / "src"), DOCS_SCHEMA, n_buckets=4
+        spark, str(tmp_path / "src"), DOCS_SCHEMA, n_buckets=4, merge_mode=mode
     )
     ev = spark.createDataFrame(
         [("d1", "U", 1, [1, 2, 3], 3, "s0"), ("d2", "U", 2, [4], 1, "s1")],
@@ -215,13 +356,14 @@ def test_published_feed_is_streamable(spark, sf_small, tmp_path):
     assert_equivalent(t.read(), d.read())
 
 
-def test_publish_converges_through_dv_delete(spark, tmp_path):
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_publish_converges_through_dv_delete(spark, tmp_path, mode):
     """A deletion-vector delete must flow through the downstream feed: the
     changefeed emits 'delete' events for the masked rows (carrying the
     rows' original LSNs) and the downstream merge's same-LSN
     delete-wins tiebreak erases them — upstream and downstream states
     stay byte-equal."""
-    t = mk(spark, str(tmp_path / "up"))
+    t = mk(spark, str(tmp_path / "up"), mode)
     _drive(spark, t)
     t.delete_where("val >= 30", mode="dv", batch_id=2)  # kills c
     for b in (0, 1, 2):

@@ -34,10 +34,58 @@ def test_col_stats_recorded(spark, tmp_path):
     t = mk(spark, str(tmp_path / "t"))
     fe = t._manifest()["files"][0]
     cs = fe["col_stats"]
-    assert "val" in cs and cs["val"][0] >= 0 and cs["val"][1] <= 199
+    # the payload columns: the key has min_key/max_key, _del has_dels,
+    # and the appended rows' _lsn is all NULL, so it has no bounds
+    assert sorted(cs) == ["src", "val"]
+    assert cs["val"][0] >= 0 and cs["val"][1] <= 199
     assert cs["src"] == ["s", "s"]
-    assert "doc_id" not in cs  # key uses min_key/max_key
-    assert "_del" not in cs
+
+
+NESTED = T.StructType(
+    [
+        T.StructField("doc_id", T.StringType()),
+        T.StructField("element", T.LongType()),
+        T.StructField("tokens", T.ArrayType(T.IntegerType())),
+    ]
+)
+
+
+@pytest.mark.parametrize("legacy", [False, True])
+def test_top_level_column_named_like_a_nested_leaf(spark, tmp_path, legacy):
+    """A top-level ``element`` column beside the ``tokens`` array, whose
+    parquet leaf is also named ``element``: the zone map records only the
+    top-level column, and range reads and ``min_max`` stay exact. With
+    ``legacy`` the entries carry the array's bounds under ``element``, as
+    entries written before stats were keyed by column path do; reads must
+    not trust them."""
+    from pyspark.sql import functions as F
+
+    t = ManifestParquetTable.create(spark, str(tmp_path / "t"), NESTED, n_buckets=2)
+    t.append(
+        spark.range(100).select(
+            F.format_string("k%03d", "id").alias("doc_id"),
+            (F.col("id") + 1000).alias("element"),
+            F.array((F.col("id") % 10).cast("int")).alias("tokens"),
+        ),
+        batch_id=0,
+        assume_unique=True,
+    )
+    files = t._manifest()["files"]
+    for fe in files:
+        lo, hi = fe["col_stats"]["element"]
+        assert 1000 <= lo <= hi <= 1099
+        if legacy:
+            fe["col_stats"]["element"] = [0, 9]
+    for lo, hi in ((1010, 1019), (0, 9), (None, 1004)):
+        got = sorted(r["doc_id"] for r in t.read_where({"element": (lo, hi)}).collect())
+        want = t.read()
+        if lo is not None:
+            want = want.filter(F.col("element") >= lo)
+        want = sorted(r["doc_id"] for r in want.filter(F.col("element") <= hi).collect())
+        assert got == want
+    agg = t.read().agg(F.min("element"), F.max("element")).first()
+    vals, _ = t.min_max(["element"])
+    assert vals["element"] == (agg[0], agg[1]) == (1000, 1099)
 
 
 def test_read_range_exact_and_skips_files(spark, tmp_path):

@@ -91,13 +91,15 @@ CASES = {
 
 
 def _footer_stats(md) -> dict:
-    """Leaf name -> [min, max] over every row group, for leaves whose
-    every row group carries min/max statistics."""
+    """Column path -> [min, max] over every row group, for top-level
+    primitive columns whose every row group carries min/max statistics.
+    The leaves of nested columns (``tokens.list.element``) are left out."""
     out = {}
-    for ci, name in enumerate(md.schema.names):
+    for ci in range(md.num_columns):
+        path = md.schema.column(ci).path
         stats = [md.row_group(g).column(ci).statistics for g in range(md.num_row_groups)]
-        if all(s is not None and s.has_min_max for s in stats):
-            out[name] = [min(s.min for s in stats), max(s.max for s in stats)]
+        if "." not in path and all(s is not None and s.has_min_max for s in stats):
+            out[path] = [min(s.min for s in stats), max(s.max for s in stats)]
     return out
 
 
@@ -142,6 +144,7 @@ def test_new_entries_match_their_footers(spark, tmp_path, case):
     assert new, "the write-back wrote no file"
     for fe in new:
         assert fe == _expected_entry(t, fe["path"], t.n_buckets(), m["seq"])
+        assert "element" not in fe.get("col_stats", {})  # the tokens leaf
         rows = pq.read_table(os.path.join(t.path, fe["path"]))
         assert fe["rows"] == rows.num_rows
         keys = rows.column("doc_id").to_pylist()
