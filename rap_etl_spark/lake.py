@@ -52,7 +52,7 @@ import time
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -328,6 +328,12 @@ def _nested_leaf_names(m: dict) -> set[str]:
     return out
 
 
+def _payload_hash(cols: list) -> Column:
+    """xxhash64 of a row's payload columns, as the snapshot diff compares
+    rows by; a key-only table has no payload, so all its rows hash alike."""
+    return F.xxhash64(*cols) if cols else F.lit(0).cast("long")
+
+
 def _gc_tombstones(df: DataFrame, horizon_lsn: int | None) -> DataFrame:
     """Drop delete tombstones with ``_lsn <= horizon_lsn`` from a resolved
     with-meta frame (None keeps them all). Safe once no event at-or-below
@@ -568,10 +574,13 @@ class ManifestParquetTable:
         # same immutable dicts). The sharing is what lets _write_manifest
         # prove a bucket untouched by identity and skip its page — a deep
         # copy here would cost O(total files) JSON per commit AND defeat
-        # the reuse detection.
+        # the reuse detection. A commit's recorded change files ("changes")
+        # describe that commit only and are never carried forward.
         files = m.get("files", [])
         bm = m.get("_bm_cache")
-        rest = {k: v for k, v in m.items() if k not in ("files", "_bm_cache")}
+        rest = {
+            k: v for k, v in m.items() if k not in ("files", "_bm_cache", "changes")
+        }
         nxt = json.loads(json.dumps(rest))
         nxt["files"] = list(files)
         if bm is not None:
@@ -1101,20 +1110,33 @@ class ManifestParquetTable:
         return self.table_changes(m.get("parent"), m["snapshot_id"])
 
     def batch_delta_rows(self, batch_id: int) -> DataFrame | None:
-        """The rows of the delta files one batch's commit appended, when
-        appending delta files is all that commit did — every MoR ``merge``
-        and MoR DML commit. Returns None for any other commit (a CoW
-        rewrite, a DV delete, an append), whose change set only a snapshot
-        diff recovers (``changes_for_batch``).
+        """The change rows one batch's commit wrote itself, with ``_lsn``
+        and ``_del``, or None when it wrote none — a DV delete, an append,
+        a CoW DML commit, or a commit from before change files existed,
+        whose change set only a snapshot diff recovers
+        (``changes_for_batch``).
 
-        Rows come as written, with ``_lsn`` and ``_del``: one per key the
-        commit staged, including rows that lose to a stored newer version
-        at read time and identical re-upserts. The read is of the commit
-        snapshot's own entries, so a later DV delete, materialization or
-        compaction does not change it. Same availability as
-        ``changes_for_batch``: ValueError once the ledger entry is pruned
-        or either snapshot is expired."""
+        - A CoW ``merge`` records its change files (``changes``): the rows
+          the diff reports, deletes carrying the removed row. An empty set
+          is an empty frame that starts no job.
+        - A commit that only appended delta files (every MoR ``merge`` and
+          MoR DML commit) yields those files' rows, one per key the commit
+          staged — rows that lose to a stored newer version at read time
+          and identical re-upserts included — with tombstones' payload
+          NULL, like the table's own tombstones.
+
+        Both read the commit snapshot's own entries, so a later DV delete,
+        materialization or compaction does not change them. ValueError
+        once the ledger entry is pruned or the commit snapshot (for delta
+        commits, also its parent) is expired."""
         m = self._batch_commit(batch_id)
+        schema = _schema_from_json(
+            m["schema_versions"][str(m["current_schema_version"])]
+        )
+        if "changes" in m:
+            return self._read_files_of(
+                m, m["changes"], schema, with_meta=True, resolve=False
+            )
         parent = m.get("parent")
         before = {
             _change_sig(fe)
@@ -1125,10 +1147,16 @@ class ManifestParquetTable:
         added = [fe for fe in m["files"] if _change_sig(fe) not in before]
         if any(fe.get("kind") != "delta" for fe in added):
             return None
-        schema = _schema_from_json(
-            m["schema_versions"][str(m["current_schema_version"])]
+        rows = self._read_files_of(m, added, schema, with_meta=True, resolve=False)
+        dead = F.col(META_DEL)
+        return rows.select(
+            *[
+                F.when(~dead, F.col(c)).alias(c)
+                if c not in (self.key, META_LSN, META_DEL)
+                else F.col(c)
+                for c in rows.columns
+            ]
         )
-        return self._read_files_of(m, added, schema, with_meta=True, resolve=False)
 
     # ---------- write path ----------
     def _bucket_expr(self, col: str, n_buckets: int | None = None):
@@ -1151,7 +1179,9 @@ class ManifestParquetTable:
         files per bucket; returns manifest file entries. Files are written via
         partitionBy into a staging dir then renamed into data/ with the bucket
         encoded in the filename — keeps data/ flat (no partition-inference
-        surprises when reading explicit file lists)."""
+        surprises when reading explicit file lists). A boolean `_chg` column
+        is a second partition column of the same write: its true rows land
+        in change files (``c``-prefixed, entries ``kind: "change"``)."""
         staging = os.path.join(self.path, f"_staging-{sid}")
         # cluster by bucket before the write: one file per bucket instead of
         # (tasks x buckets) small files — same move as Iceberg's hash
@@ -1168,7 +1198,10 @@ class ManifestParquetTable:
             # it AFTER the in-partition sort — a narrow projection keeps
             # row order, so the layout survives without persisting the key
             clustered = clustered.drop(*drop_after_sort)
-        writer = clustered.write.mode("overwrite").partitionBy("_b")
+        routed = "_chg" in df.columns
+        writer = clustered.write.mode("overwrite").partitionBy(
+            "_b", *(["_chg"] if routed else [])
+        )
         # parquet bloom filter on the key column: row-group-level point
         # lookup skipping for files whose [min,max] zone map overlaps the
         # probe but doesn't contain it (the unsorted-file case zone maps
@@ -1188,18 +1221,26 @@ class ManifestParquetTable:
         _tlog("wdf.write_job", _t_job)
         _t_meta = time.monotonic()
         entries: list[dict] = []
+        leaves = []  # (staging leaf, bucket, holds change rows)
         for bdir in sorted(self.fs.listdir(staging)):
             if not bdir.startswith("_b="):
                 continue
             bucket = int(bdir.split("=", 1)[1])
+            if not routed:
+                leaves.append((bdir, bucket, False))
+                continue
+            for cdir in sorted(self.fs.listdir(os.path.join(staging, bdir))):
+                if cdir.startswith("_chg="):
+                    leaves.append((os.path.join(bdir, cdir), bucket, cdir == "_chg=true"))
+        for leaf, bucket, change in leaves:
             i = 0
-            for fn in sorted(self.fs.listdir(os.path.join(staging, bdir))):
+            for fn in sorted(self.fs.listdir(os.path.join(staging, leaf))):
                 if not fn.endswith(".parquet"):
                     continue
-                prefix = "d" if kind == "delta" else "b"
+                prefix = "c" if change else ("d" if kind == "delta" else "b")
                 new_name = f"{prefix}{bucket:05d}-{sid}-{i:04d}.parquet"
                 dest = os.path.join(self.path, "data", new_name)
-                self.fs.rename(os.path.join(staging, bdir, fn), dest)
+                self.fs.rename(os.path.join(staging, leaf, fn), dest)
                 # commit statistics from the parquet footer (driver-local
                 # metadata read, no job): exact row count (MoR ledger
                 # counts) + key-column min/max zone map (file skipping in
@@ -1219,7 +1260,9 @@ class ManifestParquetTable:
                     "rows": int(md.num_rows),
                 }
                 entry.update(self._footer_stats(md))
-                if kind == "delta":
+                if change:
+                    entry["kind"] = "change"
+                elif kind == "delta":
                     entry["kind"] = "delta"
                     entry["seq"] = int(seq) if seq is not None else 0
                 entries.append(entry)
@@ -1294,9 +1337,12 @@ class ManifestParquetTable:
         are reused — followed by the written ones. ``n_buckets`` (rebucket)
         writes under, and records, a new table modulus; ``layout`` passes
         ``sort_cols``/``max_rows_per_file``/``drop_after_sort`` through to
-        ``_write_data_files``. Returns the uncommitted manifest; the caller
-        commits it through ``_commit`` (ledgered writes) or
-        ``_write_manifest`` (maintenance)."""
+        ``_write_data_files``. When ``data`` carries ``_chg`` (a CoW
+        merge), its change rows become the commit's ``changes`` entries —
+        listed beside ``files``, never in it, and empty when nothing
+        changed. Returns the uncommitted manifest; the caller commits it
+        through ``_commit`` (ledgered writes) or ``_write_manifest``
+        (maintenance)."""
         nxt = self._next_manifest(m)
         if n_buckets is not None:
             nxt["n_buckets"] = n_buckets
@@ -1309,6 +1355,9 @@ class ManifestParquetTable:
             seq=nxt["seq"],
             **layout,
         )
+        if "_chg" in data.columns:
+            nxt["changes"] = [fe for fe in entries if fe.get("kind") == "change"]
+            entries = [fe for fe in entries if fe.get("kind") != "change"]
         nxt["files"] = keep + entries
         return nxt
 
@@ -1334,6 +1383,48 @@ class ManifestParquetTable:
         else:
             del_expr = F.lit(False)
         return df.select(*cols, lsn_expr.alias(META_LSN), del_expr.alias(META_DEL))
+
+    def _with_change_rows(self, df: DataFrame, data_cols: list[str]) -> DataFrame:
+        """A CoW merge's output rows, each once as table data (``_chg``
+        false) and a second time as a change row (``_chg`` true) when the
+        snapshot diff of the commit (``table_changes``) would report it,
+        by the diff's own rules: a live row the stored side lacks or held
+        dead is an insert, a live row whose ``_lsn`` or payload hash
+        differs from the stored live row is an update (both 'U' rows with
+        the new payload), and a tombstone over a stored live row is a
+        delete (``_del`` true) with the stored payload. The change row's
+        ``_lsn`` is the new row's, else the stored one. Losers, identical
+        re-upserts and tombstones over dead or absent keys emit nothing.
+        ``df`` carries ``key``, ``data_cols`` and ``_b``, plus the stored
+        row as ``_o_live``, ``_o_hash`` and the struct ``_o`` of its
+        payload and ``_lsn``; a frame without them (a bootstrap into empty
+        buckets) has no stored side."""
+        payload = [c for c in data_cols if c not in (META_LSN, META_DEL)]
+        n_dead = F.coalesce(F.col(META_DEL), F.lit(False))
+        chg = {c: F.col(c) for c in payload}
+        lsn = F.col(META_LSN)
+        changed = ~n_dead
+        if "_o_live" in df.columns:
+            o_live = F.col("_o_live")
+            same_row = (
+                F.coalesce(F.col(f"_o.{META_LSN}"), F.lit(-1))
+                == F.coalesce(F.col(META_LSN), F.lit(-1))
+            ) & (F.col("_o_hash") == _payload_hash([F.col(c) for c in payload]))
+            changed = F.when(n_dead, o_live).otherwise(~o_live | ~same_row)
+            chg = {c: F.when(n_dead, F.col(f"_o.{c}")).otherwise(F.col(c)) for c in payload}
+            lsn = F.coalesce(F.col(META_LSN), F.col(f"_o.{META_LSN}"))
+        chg[META_LSN], chg[META_DEL] = lsn, n_dead
+
+        def row(cols: dict, is_change: bool):
+            return F.struct(
+                *[cols.get(c, F.col(c)).alias(c) for c in data_cols],
+                F.lit(is_change).alias("_chg"),
+            )
+
+        rows = F.when(changed, F.array(row({}, False), row(chg, True))).otherwise(
+            F.array(row({}, False))
+        )
+        return df.select(self.key, F.inline(rows), "_b")
 
     def append(
         self,
@@ -1427,6 +1518,13 @@ class ManifestParquetTable:
           late-arriving older event cannot resurrect a deleted key.
         - Survivor rows (keys untouched in affected buckets) are carried via
           a left-anti join; matched old rows join the LWW reduction.
+        - The commit's change set rides the same write: every row the
+          snapshot diff of this commit would report (``_with_change_rows``)
+          is written a second time into per-bucket change files, listed in
+          the manifest's ``changes`` beside ``files`` (empty when nothing
+          changed). ``publish.batch_events`` reads them instead of diffing
+          both sides of the rewritten buckets. The price is up to twice the
+          write bytes on a merge that changes every row it rewrites.
 
         ``mode`` (default: the table's ``merge_mode``):
 
@@ -1610,6 +1708,7 @@ class ManifestParquetTable:
                         ).otherwise(F.coalesce(c_col, o_col))
                     return c_col
 
+                payload = [col for col in data_cols if col not in meta_cols]
                 new_data = (
                     o.join(c, o_key == c_key, "full_outer")
                     .select(
@@ -1620,9 +1719,18 @@ class ManifestParquetTable:
                             .alias(col)
                             for col in data_cols
                         ],
+                        # the stored row, which the change rows compare to
+                        (o_key.isNotNull() & (o_d == 0)).alias("_o_live"),
+                        _payload_hash([F.col(f"o.{col}") for col in payload]).alias(
+                            "_o_hash"
+                        ),
+                        F.struct(
+                            *[F.col(f"o.{col}") for col in payload + [META_LSN]]
+                        ).alias("_o"),
                     )
                     .withColumn("_b", self._bucket_expr(self.key))
                 )
+            new_data = self._with_change_rows(new_data, data_cols)
 
             _t0 = time.monotonic()
             nxt = self._rewrite(m, new_data, keep_entries)
@@ -2850,7 +2958,8 @@ class ManifestParquetTable:
         query result.
 
         Metadata pass (driver-side, O(files) existence probes, no job):
-        - every manifest data-file entry and deletion-vector file exists.
+        - every manifest data-file entry, deletion-vector file and change
+          file of the current commit exists.
 
         Deep pass (``deep=True``, two Spark jobs over the live file set):
         - ``footer_rows``: each file's actual row count equals the
@@ -2895,6 +3004,9 @@ class ManifestParquetTable:
                         "of": fe["path"],
                     }
                 )
+        for fe in m.get("changes", []):
+            if not self.fs.exists(os.path.join(self.path, fe["path"])):
+                errors.append({"check": "missing_change", "path": fe["path"]})
         if deep and files and not errors:
             default_nb = int(m.get("n_buckets") or 1)
             fmap = local_frame(
@@ -3005,12 +3117,13 @@ class ManifestParquetTable:
     def expire_snapshots(
         self, keep: int = 3, orphan_grace_sec: float = 3600.0
     ) -> int:
-        """Drop all but the newest `keep` snapshot manifests, delete data
-        files referenced by no surviving snapshot, and sweep ORPHANS: data
-        files, bloom sidecars and bucket-manifest pages referenced by no
-        surviving root (left behind by crashed writes, OCC-conflicted
-        commits whose manifest was abandoned, or rewrites that dropped a
-        bloom pointer). Orphans younger than `orphan_grace_sec` are kept —
+        """Drop all but the newest `keep` snapshot manifests, delete data,
+        DV and change files referenced by no surviving snapshot, and sweep
+        ORPHANS: data files, bloom sidecars and bucket-manifest pages
+        referenced by no surviving root (left behind by crashed writes,
+        OCC-conflicted commits whose manifest was abandoned, or rewrites
+        that dropped a bloom pointer). Orphans younger than
+        `orphan_grace_sec` are kept —
         an in-flight commit renames its data files into data/ BEFORE
         publishing the manifest, so a grace window (Iceberg's
         remove_orphan_files `older_than` rule) is what makes the sweep safe
@@ -3063,15 +3176,15 @@ class ManifestParquetTable:
             for fn, _ in manifests
             if fn not in reachable and not aged(os.path.join(mdir, fn))
         )
-        # basenames of everything a surviving root references: data and DV
-        # files, bloom sidecars and bucket-manifest pages
+        # basenames of everything a surviving root references: data, DV and
+        # change files, bloom sidecars and bucket-manifest pages
         referenced: set[str] = set()
         for fn, man in manifests:
             if fn in keep_set:
                 referenced.update(
                     name for name, _ in (man.get("_bm_cache") or {}).values()
                 )
-                for fe in man["files"]:
+                for fe in man["files"] + man.get("changes", []):
                     referenced.add(os.path.basename(fe["path"]))
                     if fe.get("dv"):
                         referenced.add(os.path.basename(fe["dv"]["path"]))
@@ -3080,7 +3193,7 @@ class ManifestParquetTable:
         deleted = 0
         for fn, man in manifests:
             if fn not in keep_set:
-                for fe in man["files"]:
+                for fe in man["files"] + man.get("changes", []):
                     paths = [fe["path"]] + (
                         [fe["dv"]["path"]] if fe.get("dv") else []
                     )
@@ -3241,8 +3354,12 @@ class ManifestParquetTable:
         out = ManifestParquetTable(
             self.spark, dest_path, key=self.key, fs=self.fs
         )
+        # the source commit's change files describe the source's history,
+        # not the clone's: they are neither linked nor listed
         manifest = json.loads(
-            json.dumps({k: v for k, v in m.items() if k != "_bm_cache"})
+            json.dumps(
+                {k: v for k, v in m.items() if k not in ("_bm_cache", "changes")}
+            )
         )
         manifest["snapshot_id"] = out._new_snapshot_id(0)
         manifest["parent"] = None

@@ -7,12 +7,14 @@ add/remove graph-diff publishing model (its sync-to-VIVO delta
 computation per publication record)").
 
 After a batch commits, its events (`batch_events`) are published to a
-per-batch leaf under a downstream log directory. A commit that only
-appended delta files — every merge-on-read merge and MoR DML commit —
-publishes those files' rows: one scan and projection sized by the batch,
-the way Delta Lake's change-data files and Iceberg's incremental read
-serve a commit's own files. Every other commit (a copy-on-write rewrite,
-a deletion-vector delete, an append) publishes the bucket-pruned manifest
+per-batch leaf under a downstream log directory. A commit that wrote its
+own change rows publishes them: one scan and projection sized by the
+batch, the way Delta Lake's change-data files and Iceberg's incremental
+read serve a commit's own files. A copy-on-write merge writes its change
+files beside the rewritten buckets in the same job (exactly the rows the
+snapshot diff reports); a merge-on-read merge or MoR DML commit's delta
+files are its change rows. Every other commit (CoW DML, a
+deletion-vector delete, an append) publishes the bucket-pruned manifest
 diff of its snapshot against the parent (`changes_for_batch`).
 Exactly-once by construction:
 
@@ -64,26 +66,29 @@ def changes_to_events(changes: DataFrame, lsn_col: str = "_change_lsn") -> DataF
 def batch_events(table: ManifestParquetTable, batch_id: int) -> DataFrame:
     """One committed batch as CDC events ``(key, payload..., op, lsn)``.
 
-    A commit that only appended delta files yields those files' rows
-    (``batch_delta_rows``): ``op`` is 'D' for a tombstone, whose payload
-    is NULL like the table's own tombstones, and 'U' otherwise, with
-    ``lsn`` the row's ``_lsn``. Any other commit yields its snapshot diff
-    through ``changes_to_events``. Both raise ValueError once the batch's
-    snapshots are out of retention."""
+    A commit that wrote its own change rows (``batch_delta_rows``: the
+    change files of a CoW merge, the delta files of a MoR commit) yields
+    those rows as a changefeed (a delete where ``_del`` is set, else an
+    insert, versioned by ``_lsn``) — one scan and a projection. A CoW
+    merge's rows are exactly its snapshot diff's events, deletes carrying
+    the removed row; a MoR delete carries a NULL payload. Any other
+    commit yields its snapshot diff. Both become events through
+    ``changes_to_events``, so a payload column named ``op`` or ``lsn`` is
+    replaced the same way on every path. All raise ValueError once the
+    batch's snapshots are out of retention."""
     rows = table.batch_delta_rows(batch_id)
     if rows is None:
-        return changes_to_events(table.changes_for_batch(batch_id))
-    dead = F.col(META_DEL)
-    return rows.select(
-        table.key,
-        *[
-            F.when(~dead, F.col(c)).alias(c)
-            for c in rows.columns
-            if c not in (table.key, META_LSN, META_DEL)
-        ],
-        F.when(dead, F.lit("D")).otherwise(F.lit("U")).alias("op"),
-        F.coalesce(F.col(META_LSN), F.lit(0)).alias("lsn"),
-    )
+        changes = table.changes_for_batch(batch_id)
+    else:
+        changes = rows.select(
+            table.key,
+            *[c for c in rows.columns if c not in (table.key, META_LSN, META_DEL)],
+            F.when(F.col(META_DEL), F.lit("delete"))
+            .otherwise(F.lit("insert"))
+            .alias("_change_type"),
+            F.col(META_LSN).alias("_change_lsn"),
+        )
+    return changes_to_events(changes)
 
 
 def atomic_publish(out_dir: str, leaf: str, write, count) -> dict:
@@ -132,13 +137,15 @@ def publish_changes(
     """Publish one committed batch's events (``batch_events``) to
     `out_dir/batch=<id>`.
 
-    A commit that only appended delta files (MoR merges and MoR DML)
-    publishes the rows of those files, with NULL payloads on deletes, so
-    its ``rows`` equals the ledger's ``event_count``; every other commit
-    publishes its snapshot diff (post-images and deletes with their
-    pre-image payload). Returns {"batch_id", "published", "rows"} —
-    published=False when the leaf already exists (idempotent redelivery),
-    plus "error" when the batch's snapshots are out of retention.
+    A CoW merge publishes the change files it wrote, which hold its
+    snapshot diff's rows (post-images, and deletes with their pre-image
+    payload); a commit that only appended delta files (MoR merges and MoR
+    DML) publishes the rows of those files, with NULL payloads on
+    deletes, so its ``rows`` equals the ledger's ``event_count``; every
+    other commit publishes its snapshot diff. Returns {"batch_id",
+    "published", "rows"} — published=False when the leaf already exists
+    (idempotent redelivery), plus "error" when the batch's snapshots are
+    out of retention.
     `fmt="binlog"` writes a `.rapwal` segment dir via the custom
     DataSource instead of parquet — same atomic-rename publish either
     way."""

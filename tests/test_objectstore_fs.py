@@ -215,3 +215,55 @@ def test_live_lock_blocks_until_released(spark, tmp_path):
     # the commit can only have completed after the live lock was released
     assert released.is_set()
     assert t.read().count() == 1
+
+
+@pytest.mark.parametrize("backend", [PosixFS, ObjectStoreFS], ids=["posix", "objectstore"])
+def test_change_files_live_and_die_with_their_snapshot(spark, tmp_path, backend):
+    """A CoW merge's change files are referenced by the snapshot that lists
+    them and by no other: ``expire_snapshots`` keeps those of retained
+    snapshots and removes those of expired snapshots and of an OCC loser,
+    whose files first survive the grace window. ``fsck`` and CLI ``fsck``
+    report a missing change file, and a clone, which lists none, is
+    fsck-clean."""
+    from rap_etl_spark.cli import main as cli_main
+    from rap_etl_spark.lake import CommitConflictError
+
+    path = str(tmp_path / "t")
+    fs = backend()
+    t = _replay(spark, path, fs)
+
+    def changes(man):
+        return {os.path.basename(fe["path"]) for fe in man["changes"]}
+
+    def data_files():
+        return set(os.listdir(os.path.join(path, "data")))
+
+    expired = changes(t._batch_commit(0)) | changes(t._batch_commit(1))
+    assert expired <= data_files()
+    loser = ManifestParquetTable(spark, path, fs=fs)
+    loser._manifest()  # pinned to batch 1's snapshot
+    t.merge(events(spark, [("k1", "U", 200, 1)]), batch_id=2)
+    kept = changes(t._manifest())
+    assert kept and kept <= data_files()
+    before = data_files()
+    with pytest.raises(CommitConflictError):
+        loser.merge(events(spark, [("k2", "U", 201, 2)]), batch_id=3)
+    lost = {f for f in data_files() - before if f.startswith("c")}
+    assert lost
+
+    t.expire_snapshots(keep=1, orphan_grace_sec=3600)
+    assert kept | lost <= data_files() and not expired & data_files()
+    t.expire_snapshots(keep=1, orphan_grace_sec=0)
+    assert kept <= data_files() and not lost & data_files()
+    assert t.fsck()["ok"]
+
+    c = t.clone(str(tmp_path / "clone"))
+    assert "changes" not in c._manifest() and c.fsck()["ok"]
+
+    victim = sorted(kept)[0]
+    os.remove(os.path.join(path, "data", victim))
+    rep = t.fsck(deep=False)
+    assert rep["errors"] == [
+        {"check": "missing_change", "path": os.path.join("data", victim)}
+    ]
+    assert cli_main(["fsck", "--table", path, "--shallow"]) == 1

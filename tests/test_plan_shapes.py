@@ -696,3 +696,56 @@ def test_mor_batch_events_plan_is_scan_and_project(spark, tmp_path):
             yield from scopes(child, scope)
 
     assert list(scopes(ast.parse(inspect.getsource(publish)))) == [("batch_events",)]
+
+
+def _cow_table(spark, path):
+    from pyspark.sql import types as T
+
+    from rap_etl_spark.lake import ManifestParquetTable
+
+    schema = T.StructType(
+        [T.StructField("doc_id", T.StringType()), T.StructField("v", T.LongType())]
+    )
+    return ManifestParquetTable.create(spark, path, schema, n_buckets=2)
+
+
+def _cow_batch(spark, b, op="U"):
+    return spark.range(20).select(
+        F.concat(F.lit("k"), F.col("id")).alias("doc_id"),
+        F.lit(op).alias("op"),
+        (F.col("id") + 100 * b).alias("lsn"),
+        (F.col("id") + b).alias("v"),
+    )
+
+
+def test_cow_batch_events_plan_is_scan_and_project(spark, tmp_path):
+    """A CoW batch publishes the change files its merge wrote: the events
+    frame plans as a scan and a projection, with no join, aggregate or
+    exchange. Deletes carry the row they removed, as the snapshot diff
+    reports them."""
+    from rap_etl_spark import publish
+
+    t = _cow_table(spark, str(tmp_path / "t"))
+    for b in (0, 1):
+        t.merge(_cow_batch(spark, b, "D" if b else "U"), batch_id=b)
+    df = publish.batch_events(t, 1)
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    for node in ("Join", "Aggregate", "Repartition"):
+        assert node not in optimized, optimized
+    plan = formatted_plan(df)
+    assert "Exchange" not in plan and "Join" not in plan, plan
+    dead = df.filter(F.col("op") == "D").collect()
+    assert len(dead) == 20 and all(r["v"] is not None for r in dead)
+
+
+def test_hinted_cow_merge_starts_no_extra_job(spark, tmp_path):
+    """Writing a CoW merge's change rows rides its one write: a hinted
+    merge over existing buckets starts as many Spark jobs as it did before
+    change files existed."""
+    t = _cow_table(spark, str(tmp_path / "t"))
+    t.merge(_cow_batch(spark, 0), batch_id=0)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    t.merge(_cow_batch(spark, 1), batch_id=1, affected_buckets={0, 1}, n_rows=20)
+    jobs = set(tracker.getJobIdsForGroup()) - before
+    assert len(jobs) == 4, sorted(jobs)

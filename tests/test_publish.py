@@ -398,3 +398,148 @@ def test_observed_rows_is_none_for_a_pruned_observation(spark):
         .save()
     )
     assert observed_rows(obs) is None
+
+
+def _event_rows(df):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in df.select("doc_id", "val", "src", "op", "lsn").collect())
+
+
+def _keys_in_buckets(spark, t, buckets, n=40):
+    """Keys ``k0``..``k<n>`` whose bucket at the table's modulus is in
+    ``buckets``."""
+    df = spark.range(n).select(F.format_string("k%d", "id").alias("doc_id"))
+    return sorted(
+        r["doc_id"]
+        for r in df.select("doc_id", t._bucket_expr("doc_id").alias("b")).collect()
+        if r["b"] in buckets
+    )
+
+
+def test_cow_batch_events_equal_the_snapshot_diff(spark, tmp_path):
+    """A copy-on-write batch publishes exactly the rows the snapshot diff
+    of its commit reports (``changes_to_events(changes_for_batch)``),
+    payload of deletes included: inserts, updates, a late lower-``lsn``
+    event, an identical re-upsert, deletes of a present and an absent key,
+    patch updates, a hinted bootstrap into empty buckets, a CoW merge over
+    MoR deltas, a merge after ``split_buckets`` that migrates old-modulus
+    files, and a merge over a deletion-vector-masked file. A re-publish
+    after the leaf was deleted writes identical rows."""
+    from rap_etl_spark.publish import changes_to_events
+
+    t = mk(spark, str(tmp_path / "src"))
+    low = _keys_in_buckets(spark, t, {0, 1})
+    high = _keys_in_buckets(spark, t, {2, 3})
+    a, b, c, d, e = low[:5]
+    cow = []
+
+    def merge(rows, batch_id, **kw):
+        t.merge(ch(spark, rows), batch_id=batch_id, **kw)
+        cow.append(batch_id)
+
+    # bootstrap into an empty table, with a delete of an absent key
+    merge([(k, "U", i + 1, (i + 1) * 10, "w") for i, k in enumerate(low[:5])]
+          + [("zz", "D", 9, None, None)], 0)
+    merge([
+        (a, "U", 20, 100, "u"),  # update
+        (b, "U", 0, 999, "late"),  # below the stored lsn 2: loses
+        (c, "U", 3, 30, "w"),  # identical re-upsert
+        (d, "D", 21, None, None),  # delete of a present key
+        ("yy", "D", 22, None, None),  # delete of an absent key
+        (low[5], "U", 23, 90, "w"),  # insert
+    ], 1)
+    merge([(a, "U", 30, None, "p"), (e, "U", 31, 555, None)], 2,
+          update_semantics="patch")
+    merge([(k, "U", 40 + i, i, "h") for i, k in enumerate(high[:4])]
+          + [(high[4], "D", 50, None, None)], 3,
+          affected_buckets={2, 3}, n_rows=5)
+    t.set_merge_mode("mor")
+    t.merge(ch(spark, [(a, "U", 60, 7, "m"), (low[6], "U", 61, 8, "m"),
+                       (b, "D", 62, None, None)]), batch_id=4)
+    t.set_merge_mode("cow")
+    merge([
+        (a, "U", 60, 7, "m"),  # identical to the MoR delta row
+        (low[6], "D", 70, None, None),  # delete of a MoR-inserted key
+        (b, "U", 71, 2, "back"),  # re-insert over a MoR tombstone
+        (c, "U", 72, 31, "w"),
+    ], 5)
+    t.split_buckets(2)
+    merge([(c, "U", 80, 32, "s"), (e, "D", 81, None, None),
+           (low[7], "U", 82, 1, "s")], 6)
+    t.delete_where(F.col("doc_id") == high[0], mode="dv", batch_id=7)
+    merge([(high[0], "U", 90, 5, "dv"), (high[1], "U", 91, 6, "dv")], 8)
+
+    sizes = {}
+    for bid in cow:
+        want = _event_rows(changes_to_events(t.changes_for_batch(bid)))
+        assert _event_rows(batch_events(t, bid)) == want, bid
+        sizes[bid] = sum(want.values())
+    assert sizes == {0: 5, 1: 3, 2: 2, 3: 4, 5: 3, 6: 3, 8: 2}
+    deletes = [r for r in _event_rows(batch_events(t, 1)) if r[3] == "D"]
+    assert deletes == [(d, 40, "w", "D", 21)]
+
+    feed = str(tmp_path / "feed")
+    assert publish_changes(t, 1, feed)["rows"] == 3
+    first = _leaf(spark, f"{feed}/batch=1")
+    shutil.rmtree(f"{feed}/batch=1")
+    t.compact()
+    assert publish_changes(t, 1, feed)["rows"] == 3
+    assert _leaf(spark, f"{feed}/batch=1") == first
+
+
+@pytest.mark.parametrize("seeded", [2_000, 40_000])
+def test_cow_batch_events_read_only_the_commits_change_files(spark, tmp_path, seeded):
+    """A CoW batch's events come from exactly the change files its merge
+    wrote beside the rewritten buckets: the same 200-key batch reads the
+    same files, whatever the table size, and neither side of the buckets
+    it rewrote."""
+    t = mk(spark, str(tmp_path / "src"))
+    t.merge(
+        spark.range(seeded).select(
+            F.format_string("k%06d", "id").alias("doc_id"),
+            F.lit("U").alias("op"),
+            F.col("id").alias("lsn"),
+            F.col("id").alias("val"),
+            F.lit("s").alias("src"),
+        ),
+        batch_id=0,
+    )
+    t.merge(
+        spark.range(0, 2_000, 10).select(
+            F.format_string("k%06d", "id").alias("doc_id"),
+            F.lit("U").alias("op"),
+            (F.col("id") + seeded).alias("lsn"),
+            (F.col("id") + 1).alias("val"),
+            F.lit("t").alias("src"),
+        ),
+        batch_id=1,
+    )
+    changes = t._manifest()["changes"]
+    assert changes and sum(fe["rows"] for fe in changes) == 200
+    data = {fe["path"] for fe in t._manifest()["files"]}
+    assert not data & {fe["path"] for fe in changes}
+    ev = batch_events(t, 1)
+    assert _basenames(ev.inputFiles()) == _basenames(fe["path"] for fe in changes)
+    assert ev.columns == ["doc_id", "val", "src", "op", "lsn"]
+    assert ev.count() == 200
+
+
+def test_cow_key_only_table_publishes_its_change_files(spark, tmp_path):
+    """A table with no payload column merges and publishes: its rows
+    compare by ``_lsn`` alone, so an insert and a delete publish and an
+    identical re-upsert does not."""
+    t = ManifestParquetTable.create(
+        spark, str(tmp_path / "t"), T.StructType([T.StructField("doc_id", T.StringType())]),
+        n_buckets=2,
+    )
+    rows = "doc_id string, op string, lsn long"
+    t.merge(spark.createDataFrame([("a", "U", 1), ("b", "U", 2)], rows), batch_id=0)
+    t.merge(
+        spark.createDataFrame([("a", "D", 3), ("b", "U", 2), ("c", "U", 4)], rows),
+        batch_id=1,
+    )
+    assert sorted(tuple(r) for r in batch_events(t, 1).collect()) == [
+        ("a", "D", 3), ("c", "U", 4),
+    ]
+    assert sorted(r["doc_id"] for r in t.read().collect()) == ["b", "c"]
