@@ -82,6 +82,8 @@ import sys
 
 from pyspark.sql import SparkSession
 
+from rap_etl_spark.fsio import list_batches
+
 
 def _spark(app: str) -> SparkSession:
     active = SparkSession.getActiveSession()
@@ -148,11 +150,7 @@ def cmd_replay(args) -> int:
         def load(b):
             return spark.read.parquet(os.path.join(args.log, f"batch={b}"))
 
-        discovered = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(args.log)
-            if d.startswith("batch=")
-        )
+        discovered = list_batches(t.fs, args.log)
     if args.batches:
         batch_ids = [int(b) for b in args.batches.split(",")]
         unknown = [b for b in batch_ids if b not in set(discovered)]
@@ -189,13 +187,15 @@ def cmd_replay(args) -> int:
             )
         if getattr(args, "feed_topic", None):
             # outbound replication inline with the tail: each applied
-            # batch's changefeed goes straight to the topic under the
+            # batch's events go straight to the topic under the
             # feed-ledger idempotency contract — the apply→publish loop a
             # downstream replica follows live
+            from rap_etl_spark.publish import batch_events
+
             rec["feed"] = _feed_one_to_topic(
                 t,
                 str(b),
-                lambda b=b: t.changes_for_batch(b),
+                lambda b=b: batch_events(t, b),
                 args.feed_topic,
                 args.feed_partitions,
             )
@@ -654,13 +654,17 @@ def cmd_export(args) -> int:
 
 
 def _feed_one_to_topic(t, tag: str, load, out: str, partitions: int) -> dict:
-    """Publish one changefeed slice to a partitioned WAL topic with the
-    feed-ledger idempotency contract (shared by `feed` and
+    """Publish one slice of CDC events (``load()``) to a partitioned WAL
+    topic with the feed-ledger idempotency contract (shared by `feed` and
     `replay --feed-topic`): already-fed tags are no-ops, retention-expired
     ones record a permanent skip marker, everything else appends segments
-    then records the tag."""
+    then records the tag.
+
+    A topic carries events, not pre-images, so a batch tag loads
+    ``publish.batch_events``: the rows the commit wrote itself when it
+    recorded them (one scan sized by the batch), else its snapshot diff.
+    A snapshot-range tag loads ``changes_to_events`` of the range diff."""
     from rap_etl_spark.fsio import POSIX_FS
-    from rap_etl_spark.publish import changes_to_events
     from rap_etl_spark.sources.topic import write_topic
 
     ledger_path = os.path.join(out, "_feed_ledger.json")
@@ -675,11 +679,12 @@ def _feed_one_to_topic(t, tag: str, load, out: str, partitions: int) -> dict:
     if any(e.split("!", 1)[0] == tag for e in _done()):
         return {"out": out, "tag": tag, "published": False}
     try:
-        ev = changes_to_events(load())
+        ev = load()
     except ValueError as e:
         # Only a PROVABLE retention expiry gets a permanent skip marker
-        # ("<tag>!expired"): the batch is in the commit ledger but its
-        # snapshot pair is gone — unrecoverable from this table, surfaced
+        # ("<tag>!expired"): the batch is in the commit ledger but the
+        # snapshots its events need are gone — unrecoverable from this
+        # table, surfaced
         # exactly once, never retried forever (the operator repairs the
         # replica with snapshot_sync). Every other ValueError (batch not
         # committed yet — operator typo or a race with the replay — or a
@@ -749,11 +754,7 @@ def cmd_bootstrap(args) -> int:
             F.pmod(F.xxhash64("doc_id"), F.lit(n)) == cid
         )
 
-    batch_ids = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(args.log)
-        if d.startswith("batch=")
-    )
+    batch_ids = list_batches(t.fs, args.log)
 
     def batches():
         for b in batch_ids:
@@ -839,28 +840,34 @@ def cmd_feed(args) -> int:
     and the consumer's version-conditional merge is idempotent per event,
     so the downstream STATE is exactly-once — the standard Kafka contract.
     A `_feed_ledger.json` in the topic dir skips already-published batch
-    ids on the happy path.
+    ids on the happy path. A batch's events are `publish.batch_events`,
+    the same rows `publish_changes` writes (read O(batch) when the commit
+    recorded its change rows); a snapshot range's are its diff's.
 
     --format envelope: Debezium JSON-lines envelopes (one `u` per update
     carrying both images) into `<out>/batch=<id>` leaves with the same
     atomic-rename exactly-once publish as publish_changes — the feed for
-    external, non-engine consumers."""
+    external, non-engine consumers. Envelopes need pre-images, so they
+    always come from the snapshot diff."""
     from pyspark.sql import functions as F
 
     from rap_etl_spark.lake import ManifestParquetTable
     from rap_etl_spark.operators.cdc import fold_changes_to_envelopes
+    from rap_etl_spark.publish import batch_events, changes_to_events
 
     spark = _spark("rap-etl-feed")
     t = ManifestParquetTable(spark, args.table)
     if args.format == "topic":
         if args.batch is not None:
-            work = [(str(args.batch), lambda b=args.batch: t.changes_for_batch(b))]
+            work = [(str(args.batch), lambda b=args.batch: batch_events(t, b))]
         elif args.from_snapshot or args.to_snapshot:
             tag = args.to_snapshot or t.snapshot_id()
             work = [
                 (
                     str(tag),
-                    lambda: t.table_changes(args.from_snapshot, args.to_snapshot),
+                    lambda: changes_to_events(
+                        t.table_changes(args.from_snapshot, args.to_snapshot)
+                    ),
                 )
             ]
         else:
@@ -869,7 +876,7 @@ def cmd_feed(args) -> int:
             # "sync the topic to the table's ledger now", so a cron'd feed
             # after each replay keeps downstream replicas current
             work = [
-                (str(b), lambda b=b: t.changes_for_batch(b))
+                (str(b), lambda b=b: batch_events(t, b))
                 for b in sorted(int(x) for x in t.committed_batches())
             ]
         for tag, load in work:

@@ -23,6 +23,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rap_etl_spark.fsio import list_batches
 from rap_etl_spark.lake import (
     CommitConflictError,
     CommitInfo,
@@ -513,10 +514,7 @@ def replay_log(
     engine = CdcEngine(
         spark, table, lineage_dir=lineage_dir, count_input=count_input
     )
-    batches = sorted(
-        int(d.split("=", 1)[1]) for d in os.listdir(log_dir) if d.startswith("batch=")
-    )
-    for b in batches:
+    for b in list_batches(table.fs, log_dir):
         df = spark.read.parquet(os.path.join(log_dir, f"batch={b}"))
         engine.apply_batch(df, batch_id=b)
     return engine.metrics
@@ -595,9 +593,8 @@ def requeue_quarantine(
     else:
         leaves = [
             d
-            for d in sorted(fs.listdir(quarantine_dir))
-            if d.startswith("batch=")
-            and not any(
+            for d in (f"batch={b}" for b in list_batches(fs, quarantine_dir))
+            if not any(
                 m.startswith("_requeued-")
                 for m in fs.listdir(os.path.join(quarantine_dir, d))
             )

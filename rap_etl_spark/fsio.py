@@ -360,3 +360,15 @@ class ObjectStoreFS:
 
 
 POSIX_FS = PosixFS()
+
+
+def list_batches(fs: TableFS, log_dir: str) -> list[int]:
+    """The ids of a log directory's ``batch=<id>`` leaves, listed through
+    ``fs``, in numeric order (``batch=10`` after ``batch=9``). Entries
+    that are not a canonical ``batch=<id>`` leaf — a publish's ``_tmp-*``
+    staging dir, ``_SUCCESS``, a zero-padded id — are ignored."""
+    return sorted(
+        int(d[6:])
+        for d in fs.listdir(log_dir)
+        if d.startswith("batch=") and d[6:].isdecimal() and str(int(d[6:])) == d[6:]
+    )

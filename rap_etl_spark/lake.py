@@ -87,6 +87,11 @@ def _schema_from_json(s: str) -> T.StructType:
     return T.StructType.fromJson(json.loads(s))
 
 
+def _schema_of(m: dict) -> T.StructType:
+    """The logical schema of snapshot manifest ``m``."""
+    return _schema_from_json(m["schema_versions"][str(m["current_schema_version"])])
+
+
 def _is_widening(old: T.DataType, new: T.DataType) -> bool:
     """int32 -> int64 widening, including inside arrays (SURVEY.md C6)."""
     if isinstance(old, T.IntegerType) and isinstance(new, T.LongType):
@@ -326,6 +331,26 @@ def _nested_leaf_names(m: dict) -> set[str]:
             if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType)):
                 out |= leaves(f.name, f.dataType)
     return out
+
+
+def _diff_reports(
+    o_live: Column,
+    o_lsn: Column,
+    o_hash: Column,
+    n_dead: Column,
+    n_lsn: Column,
+    n_hash: Column,
+) -> Column:
+    """Whether the snapshot diff reports a key, from its stored (old) and
+    new rows: a dead new row over a live stored row is a delete (of the
+    stored payload), a live new row over no live stored row is an insert,
+    and a live new row whose ``_lsn`` or payload hash (``_payload_hash``)
+    differs from the live stored row's is an update. The one change rule
+    of ``table_changes`` and a CoW merge's change rows."""
+    same_row = (F.coalesce(o_lsn, F.lit(-1)) == F.coalesce(n_lsn, F.lit(-1))) & (
+        o_hash == n_hash
+    )
+    return F.when(n_dead, o_live).otherwise(~o_live | ~same_row)
 
 
 def _payload_hash(cols: list) -> Column:
@@ -601,8 +626,7 @@ class ManifestParquetTable:
 
     # ---------- metadata API ----------
     def schema(self) -> T.StructType:
-        m = self._manifest()
-        return _schema_from_json(m["schema_versions"][str(m["current_schema_version"])])
+        return _schema_of(self._manifest())
 
     def snapshot_id(self) -> str:
         return self._manifest()["snapshot_id"]
@@ -797,33 +821,45 @@ class ManifestParquetTable:
     def _read_files(
         self,
         files: list[dict],
-        target_schema: T.StructType,
+        target_schema: T.StructType | None = None,
         with_meta: bool = False,
+        m: dict | None = None,
+        positions: bool = False,
     ) -> DataFrame:
-        """Read data files grouped by write-time schema version, cast each
-        group up to target_schema, union. Iceberg-style read-time resolution:
-        old int32 files stay readable after int64 widening. Tombstones are
-        filtered out unless with_meta=True.
+        """THE data-file scan: every read of data files in this module is
+        built here. Files are read grouped by write-time schema version,
+        each group at its version's physical schema, and unioned.
 
-        Files carrying a DELETION VECTOR (``fe["dv"]``, written by
-        ``delete_where(mode='dv')``) are scanned with Spark's
-        ``_metadata.row_index`` and masked by an anti-join on
-        (file basename, position) — Iceberg v3 DV semantics: the base file
-        is untouched, killed positions vanish at scan time, BEFORE any
-        MoR key resolution stacks on top. Files without a DV (the whole
-        table until the first DV delete) take the unchanged fast path —
-        no metadata columns, no join.
+        - ``target_schema`` casts every group up to it (Iceberg-style
+          read-time resolution: old int32 files stay readable after int64
+          widening) and filters tombstones out, or keeps them with ``_del``
+          coalesced when ``with_meta``. ``None`` returns the rows as stored
+          — no cast, no tombstone handling — for maintenance that must see
+          or rewrite every physical row (DV delete and rewrite, bloom
+          build, fsck).
+        - Files carrying a DELETION VECTOR (``fe["dv"]``, written by
+          ``delete_where(mode='dv')``) are scanned with Spark's
+          ``_metadata.row_index`` and masked by an anti-join on (file
+          basename, position) — Iceberg v3 DV semantics: the base file is
+          untouched, killed positions vanish at scan time, BEFORE any MoR
+          key resolution stacks on top. Files without a DV (the whole
+          table until the first DV delete) take the fast path — no
+          metadata columns, no join.
+        - ``positions`` scans every physical row unmasked and keeps its
+          ``(_dv_file, _dv_pos)`` (file basename, row position); use it
+          with ``target_schema=None``.
 
-        No files gives an empty ``LocalRelation`` (``local_frame``): the
-        optimizer prunes it out of any union or join it lands in, and it
-        never starts a task."""
-        m = self._manifest()
-        phys_target = self._physical_schema(target_schema)
-        plain = [fe for fe in files if not fe.get("dv")]
-        dv_entries = [fe for fe in files if fe.get("dv")]
+        ``m`` is the snapshot manifest whose schema versions the files
+        were written under, the current one by default. No files gives an
+        empty ``LocalRelation`` (``local_frame``): the optimizer prunes it
+        out of any union or join it lands in, and it never starts a task."""
+        m = self._manifest() if m is None else m
+        phys = self._physical_schema(target_schema or _schema_of(m))
         if not files:
-            df = local_frame(self.spark, [], phys_target)
+            df = local_frame(self.spark, [], phys)
         else:
+            dv_entries = [] if positions else [fe for fe in files if fe.get("dv")]
+            plain = files if positions else [fe for fe in files if not fe.get("dv")]
             parts = []
             for group, masked in ((plain, False), (dv_entries, True)):
                 if not group:
@@ -833,28 +869,34 @@ class ManifestParquetTable:
                     by_ver.setdefault(str(fe["schema_version"]), []).append(
                         os.path.join(self.path, fe["path"])
                     )
-                dvt = self._dv_frame(dv_entries) if masked else None
+                dvt = self._dv_frame(group) if masked else None
                 for ver, paths in by_ver.items():
                     ver_schema = self._physical_schema(
                         _schema_from_json(m["schema_versions"][ver])
                     )
                     part = self.spark.read.schema(ver_schema).parquet(*paths)
-                    if masked:
-                        part = (
-                            part.select(
-                                "*",
-                                F.element_at(
-                                    F.split(F.col("_metadata.file_path"), "/"), -1
-                                ).alias("_dv_file"),
-                                F.col("_metadata.row_index").alias("_dv_pos"),
-                            )
-                            .join(dvt, ["_dv_file", "_dv_pos"], "left_anti")
-                            .drop("_dv_file", "_dv_pos")
+                    if masked or positions:
+                        part = part.select(
+                            "*",
+                            F.element_at(
+                                F.split(F.col("_metadata.file_path"), "/"), -1
+                            ).alias("_dv_file"),
+                            F.col("_metadata.row_index").alias("_dv_pos"),
                         )
-                    parts.append(cast_to_schema(part, phys_target))
+                    if masked:
+                        part = part.join(
+                            dvt, ["_dv_file", "_dv_pos"], "left_anti"
+                        ).drop("_dv_file", "_dv_pos")
+                    if target_schema is not None:
+                        part = cast_to_schema(part, phys)
+                    parts.append(part)
             df = parts[0]
             for p in parts[1:]:
-                df = df.unionByName(p)
+                # rows as stored differ by version: a column added later is
+                # NULL in older files, a widened one widens in the union
+                df = df.unionByName(p, allowMissingColumns=True)
+        if target_schema is None:
+            return df
         if with_meta:
             return df.withColumn(META_DEL, F.coalesce(F.col(META_DEL), F.lit(False)))
         return df.filter(~F.coalesce(F.col(META_DEL), F.lit(False))).drop(
@@ -866,8 +908,11 @@ class ManifestParquetTable:
         files: list[dict],
         target_schema: T.StructType,
         with_meta: bool = False,
+        m: dict | None = None,
     ) -> DataFrame:
-        """Merge-on-read resolution. Buckets with no delta files stream
+        """Merge-on-read resolution of ``files`` under snapshot manifest
+        ``m`` (its schema versions and bucket modulus; the current one by
+        default). Buckets with no delta files stream
         straight through ``_read_files`` (zero overhead — the common case
         and the whole table in pure-CoW mode). Dirty buckets stack base +
         deltas with each file's commit sequence attached and reduce to one
@@ -880,21 +925,22 @@ class ManifestParquetTable:
         ``materialize_deltas`` bounds how much ever stacks. When every
         bucket holds a delta (the steady state of a busy MoR table) there
         is no clean branch at all: the resolved stack is the whole read."""
+        m = self._manifest() if m is None else m
         deltas = [fe for fe in files if fe.get("kind") == "delta"]
         if not deltas:
-            return self._read_files(files, target_schema, with_meta=with_meta)
+            return self._read_files(files, target_schema, with_meta, m)
         # Dirty region = every file sharing keys with a delta's zone. With
         # uniform moduli that is exactly "same bucket id"; after a
         # split_buckets() an old-modulus base file is dirty when ANY delta
         # bucket folds onto it (residue rule in _BucketZones) — treating
         # it as clean would skip delta application for the rows it shares.
-        nb_cur = self.n_buckets()
+        nb_cur = int(m["n_buckets"])
         dirty_files, clean = _delta_zones(files, nb_cur).split(files, nb_cur)
         by_seq: dict[int, list[dict]] = {}
         for fe in dirty_files:
             by_seq.setdefault(int(fe.get("seq", 0)), []).append(fe)
         parts = [
-            self._read_files(by_seq[s], target_schema, with_meta=True).withColumn(
+            self._read_files(by_seq[s], target_schema, True, m).withColumn(
                 "_seq", F.lit(s)
             )
             for s in sorted(by_seq)
@@ -917,7 +963,7 @@ class ManifestParquetTable:
             .select(self.key, *[F.col(f"_r.{c}").alias(c) for c in payload])
         )
         if clean:
-            out_clean = self._read_files(clean, target_schema, with_meta=True)
+            out_clean = self._read_files(clean, target_schema, True, m)
             out = out_clean.unionByName(out.select(*out_clean.columns))
         else:
             out = out.select(*self._physical_schema(target_schema).names)
@@ -928,33 +974,8 @@ class ManifestParquetTable:
         )
 
     def read(self, snapshot_id: str | None = None) -> DataFrame:
-        m = self._manifest()
-        if snapshot_id is not None and snapshot_id != m["snapshot_id"]:
-            m = self._manifest_of(snapshot_id)  # ValueError if expired
-            schema = _schema_from_json(m["schema_versions"][str(m["current_schema_version"])])
-            return self._read_files_of(m, m["files"], schema)
-        return self._read_resolved(m["files"], self.schema())
-
-    def _read_files_of(
-        self,
-        m: dict,
-        files: list[dict],
-        target_schema: T.StructType,
-        with_meta: bool = False,
-        resolve: bool = True,
-    ) -> DataFrame:
-        """Read ``files`` under snapshot ``m`` (its schema versions and
-        modulus). ``resolve`` stacks MoR deltas of the pinned snapshot into
-        one row per key (pure-CoW file lists pass through ``_read_files``
-        untouched either way); ``resolve=False`` reads every row of the
-        files as written."""
-        saved = self._manifest_cache
-        self._manifest_cache = m
-        read = self._read_resolved if resolve else self._read_files
-        try:
-            return read(files, target_schema, with_meta=with_meta)
-        finally:
-            self._manifest_cache = saved
+        m = self._manifest() if snapshot_id is None else self._manifest_of(snapshot_id)
+        return self._read_resolved(m["files"], _schema_of(m), m=m)
 
     def _manifest_of(self, snapshot_id: str) -> dict:
         """Load a (possibly non-current) snapshot's manifest. Raises if the
@@ -980,7 +1001,9 @@ class ManifestParquetTable:
         manifest layer). Returns the logical columns of the `to` snapshot
         plus `_change_type` ('insert' | 'delete' | 'update_preimage' |
         'update_postimage') and `_change_lsn` (the row version that produced
-        the change; NULL for unversioned bootstrap rows).
+        the change; NULL for unversioned bootstrap rows). A key changes by
+        the rule a CoW merge records its change rows with
+        (``_diff_reports``).
 
         Scale design — this is NOT a full-table diff:
         - Bucket pruning via manifest file lists: a bucket whose file-entry
@@ -996,17 +1019,17 @@ class ManifestParquetTable:
           so correctness is unaffected — only pruning efficiency.
 
         `from_snapshot=None` diffs from the empty table (everything live in
-        `to` is an insert). Schema evolution between the snapshots is
-        resolved read-time: the old side is cast up to the `to` schema.
+        `to` is an insert). Each side is read under its own pinned snapshot
+        manifest (``_read_resolved(..., m)``); schema evolution between the
+        snapshots is resolved read-time: the old side is cast up to the `to`
+        schema.
         """
         m_to = (
             self._manifest()
             if to_snapshot is None
             else self._manifest_of(to_snapshot)
         )
-        new_schema = _schema_from_json(
-            m_to["schema_versions"][str(m_to["current_schema_version"])]
-        )
+        new_schema = _schema_of(m_to)
         m_from = None if from_snapshot is None else self._manifest_of(from_snapshot)
 
         # Group files at the coarsest live modulus across BOTH snapshots
@@ -1039,22 +1062,21 @@ class ManifestParquetTable:
         old_files = [fe for b in changed for fe in old_b.get(b, [])]
         new_files = [fe for b in changed for fe in new_b.get(b, [])]
 
-        empty_manifest = {"schema_versions": m_to["schema_versions"]}
-        o = self._read_files_of(
-            m_from or empty_manifest, old_files, new_schema, with_meta=True
-        ).alias("o")
-        n = self._read_files_of(m_to, new_files, new_schema, with_meta=True).alias("n")
+        # with no `from` snapshot the old side has no files to resolve
+        o = self._read_resolved(old_files, new_schema, True, m_from or m_to).alias("o")
+        n = self._read_resolved(new_files, new_schema, True, m_to).alias("n")
 
         payload = [f.name for f in new_schema.fields if f.name != self.key]
         o_key, n_key = F.col(f"o.{self.key}"), F.col(f"n.{self.key}")
         o_live = o_key.isNotNull() & ~F.coalesce(F.col(f"o.{META_DEL}"), F.lit(False))
-        n_live = n_key.isNotNull() & ~F.coalesce(F.col(f"n.{META_DEL}"), F.lit(False))
-        same_row = (
-            F.coalesce(F.col(f"o.{META_LSN}"), F.lit(-1))
-            == F.coalesce(F.col(f"n.{META_LSN}"), F.lit(-1))
-        ) & (
-            F.xxhash64(*[F.col(f"o.{c}") for c in payload])
-            == F.xxhash64(*[F.col(f"n.{c}") for c in payload])
+        n_dead = n_key.isNull() | F.coalesce(F.col(f"n.{META_DEL}"), F.lit(False))
+        reported = _diff_reports(
+            o_live,
+            F.col(f"o.{META_LSN}"),
+            _payload_hash([F.col(f"o.{c}") for c in payload]),
+            n_dead,
+            F.col(f"n.{META_LSN}"),
+            _payload_hash([F.col(f"n.{c}") for c in payload]),
         )
 
         def row(side: str, kind: str):
@@ -1074,11 +1096,15 @@ class ManifestParquetTable:
         joined = o.join(n, o_key == n_key, "full_outer").select(
             F.coalesce(o_key, n_key).alias(self.key),
             F.explode(
-                F.when(~o_live & n_live, F.array(row("n", "insert")))
-                .when(o_live & ~n_live, F.array(row("o", "delete")))
-                .when(
-                    o_live & n_live & ~same_row,
-                    F.array(row("o", "update_preimage"), row("n", "update_postimage")),
+                F.when(
+                    reported,
+                    F.when(n_dead, F.array(row("o", "delete")))
+                    .when(~o_live, F.array(row("n", "insert")))
+                    .otherwise(
+                        F.array(
+                            row("o", "update_preimage"), row("n", "update_postimage")
+                        )
+                    ),
                 )
             ).alias("_c"),
         )
@@ -1125,18 +1151,16 @@ class ManifestParquetTable:
           and identical re-upserts included — with tombstones' payload
           NULL, like the table's own tombstones.
 
-        Both read the commit snapshot's own entries, so a later DV delete,
-        materialization or compaction does not change them. ValueError
+        Both scan the commit snapshot's own entries as written
+        (``_read_files`` under the pinned commit manifest, no MoR
+        resolution), so a later DV delete, materialization or compaction
+        does not change them. ValueError
         once the ledger entry is pruned or the commit snapshot (for delta
         commits, also its parent) is expired."""
         m = self._batch_commit(batch_id)
-        schema = _schema_from_json(
-            m["schema_versions"][str(m["current_schema_version"])]
-        )
+        schema = _schema_of(m)
         if "changes" in m:
-            return self._read_files_of(
-                m, m["changes"], schema, with_meta=True, resolve=False
-            )
+            return self._read_files(m["changes"], schema, True, m)
         parent = m.get("parent")
         before = {
             _change_sig(fe)
@@ -1147,7 +1171,7 @@ class ManifestParquetTable:
         added = [fe for fe in m["files"] if _change_sig(fe) not in before]
         if any(fe.get("kind") != "delta" for fe in added):
             return None
-        rows = self._read_files_of(m, added, schema, with_meta=True, resolve=False)
+        rows = self._read_files(added, schema, True, m)
         dead = F.col(META_DEL)
         return rows.select(
             *[
@@ -1388,12 +1412,10 @@ class ManifestParquetTable:
         """A CoW merge's output rows, each once as table data (``_chg``
         false) and a second time as a change row (``_chg`` true) when the
         snapshot diff of the commit (``table_changes``) would report it,
-        by the diff's own rules: a live row the stored side lacks or held
-        dead is an insert, a live row whose ``_lsn`` or payload hash
-        differs from the stored live row is an update (both 'U' rows with
-        the new payload), and a tombstone over a stored live row is a
-        delete (``_del`` true) with the stored payload. The change row's
-        ``_lsn`` is the new row's, else the stored one. Losers, identical
+        by the diff's own rule (``_diff_reports``): an insert or update is
+        a 'U' row with the new payload, and a tombstone over a stored live
+        row is a delete (``_del`` true) with the stored payload. The change
+        row's ``_lsn`` is the new row's, else the stored one. Losers, identical
         re-upserts and tombstones over dead or absent keys emit nothing.
         ``df`` carries ``key``, ``data_cols`` and ``_b``, plus the stored
         row as ``_o_live``, ``_o_hash`` and the struct ``_o`` of its
@@ -1405,12 +1427,14 @@ class ManifestParquetTable:
         lsn = F.col(META_LSN)
         changed = ~n_dead
         if "_o_live" in df.columns:
-            o_live = F.col("_o_live")
-            same_row = (
-                F.coalesce(F.col(f"_o.{META_LSN}"), F.lit(-1))
-                == F.coalesce(F.col(META_LSN), F.lit(-1))
-            ) & (F.col("_o_hash") == _payload_hash([F.col(c) for c in payload]))
-            changed = F.when(n_dead, o_live).otherwise(~o_live | ~same_row)
+            changed = _diff_reports(
+                F.col("_o_live"),
+                F.col(f"_o.{META_LSN}"),
+                F.col("_o_hash"),
+                n_dead,
+                F.col(META_LSN),
+                _payload_hash([F.col(c) for c in payload]),
+            )
             chg = {c: F.when(n_dead, F.col(f"_o.{c}")).otherwise(F.col(c)) for c in payload}
             lsn = F.coalesce(F.col(META_LSN), F.col(f"_o.{META_LSN}"))
         chg[META_LSN], chg[META_DEL] = lsn, n_dead
@@ -2201,7 +2225,8 @@ class ManifestParquetTable:
         than write cost.
 
         Cost: one column-pruned resolved scan (condition columns + key),
-        one key+_metadata-only scan (token arrays never read), one
+        one unmasked key+position scan (``_read_files(positions=True)``,
+        token arrays never read), one
         semi-join (AQE broadcasts typical delete-key sets), and one DV
         write partitioned BY BUCKET (mirroring the MoR delta layout) —
         one DV file per touched bucket, so even a GDPR-scale 10^9-row
@@ -2222,32 +2247,9 @@ class ManifestParquetTable:
             .select(self.key)
             .distinct()
         )
-        by_ver: dict[str, list[str]] = {}
-        for fe in m["files"]:
-            by_ver.setdefault(str(fe["schema_version"]), []).append(
-                os.path.join(self.path, fe["path"])
-            )
-        parts = []
-        for ver, paths in by_ver.items():
-            ver_schema = self._physical_schema(
-                _schema_from_json(m["schema_versions"][ver])
-            )
-            parts.append(
-                self.spark.read.schema(ver_schema)
-                .parquet(*paths)
-                .select(
-                    F.col(self.key),
-                    F.element_at(
-                        F.split(F.col("_metadata.file_path"), "/"), -1
-                    ).alias("_dv_file"),
-                    F.col("_metadata.row_index").alias("_dv_pos"),
-                )
-            )
-        if not parts:
+        if not m["files"]:
             return CommitInfo(m["snapshot_id"], batch_id, 0, skipped=True)
-        phys = parts[0]
-        for p in parts[1:]:
-            phys = phys.unionByName(p)
+        phys = self._read_files(m["files"], m=m, positions=True)
         old_dv = [fe for fe in m["files"] if fe.get("dv")]
         hits = phys.join(matched_keys, self.key, "left_semi").select(
             "_dv_file", "_dv_pos"
@@ -2411,23 +2413,9 @@ class ManifestParquetTable:
         for gi, ((ver, kind, seq, nb), fes) in enumerate(
             sorted(groups.items(), key=repr)
         ):
-            ver_schema = self._physical_schema(
-                _schema_from_json(m["schema_versions"][ver])
-            )
-            part = self.spark.read.schema(ver_schema).parquet(
-                *[os.path.join(self.path, fe["path"]) for fe in fes]
-            )
-            masked = (
-                part.select(
-                    "*",
-                    F.element_at(
-                        F.split(F.col("_metadata.file_path"), "/"), -1
-                    ).alias("_dv_file"),
-                    F.col("_metadata.row_index").alias("_dv_pos"),
-                )
-                .join(self._dv_frame(fes), ["_dv_file", "_dv_pos"], "left_anti")
-                .drop("_dv_file", "_dv_pos")
-                .withColumn("_b", self._bucket_expr(self.key, nb))
+            # one schema version per group: rows as stored, masked
+            masked = self._read_files(fes, m=m).withColumn(
+                "_b", self._bucket_expr(self.key, nb)
             )
             new_entries.extend(
                 self._write_data_files(
@@ -2468,8 +2456,9 @@ class ManifestParquetTable:
 
         Build is ONE column-pruned Spark job over exactly the files that
         lack a bloom (new files lose theirs by construction — entries are
-        immutable — so repeated calls are incremental): scan key +
-        `_metadata.file_path`, hash JVM-side (two xxhash64 streams), and
+        immutable — so repeated calls are incremental): scan the key as
+        stored with each row's file name (``_read_files(positions=True)``,
+        column-pruned), hash JVM-side (two xxhash64 streams), and
         fold bits per file with applyInPandas — the only per-row Python
         is vectorized numpy on Arrow batches. Filters are sized from each
         file's true row count (m = -n ln(fpp)/ln2^2 rounded to a power of
@@ -2494,21 +2483,11 @@ class ManifestParquetTable:
         ]
         if not cand:
             return CommitInfo(m["snapshot_id"], None, 0, skipped=True)
-        key_field = next(
-            f for f in self.schema().fields if f.name == self.key
-        )
-        kschema = T.StructType([key_field])
         by_base = {os.path.basename(fe["path"]): fe for fe in cand}
-        hashed = (
-            self.spark.read.schema(kschema)
-            .parquet(*[os.path.join(self.path, fe["path"]) for fe in cand])
-            .select(
-                F.element_at(
-                    F.split(F.col("_metadata.file_path"), "/"), -1
-                ).alias("f"),
-                F.xxhash64(F.col(self.key)).alias("h1"),
-                F.xxhash64(F.col(self.key), F.lit(1)).alias("h2"),
-            )
+        hashed = self._read_files(cand, m=m, positions=True).select(
+            F.col("_dv_file").alias("f"),
+            F.xxhash64(F.col(self.key)).alias("h1"),
+            F.xxhash64(F.col(self.key), F.lit(1)).alias("h2"),
         )
 
         def _build(pdf):
@@ -2974,9 +2953,10 @@ class ManifestParquetTable:
         - ``dup_live_keys``: the resolved live view has exactly one row
           per key (LWW + tombstone + DV resolution ends single-winner).
 
-        Both jobs are ONE scan each: the file audit reads only the key
-        column + ``_metadata.file_path`` (column-pruned) and broadcast-
-        joins the O(files) manifest map; the dup check is the ordinary
+        Both jobs are ONE scan each: the file audit reads only the key as
+        stored with each row's file name (``_read_files(positions=True)``,
+        column-pruned, DV positions unmasked) and broadcast-joins the
+        O(files) manifest map; the dup check is the ordinary
         resolved read + one count-distinct-shaped agg. Returns
         ``{"ok": bool, "files": n, "errors": [...]}`` with up to
         ``sample`` offending rows per check.
@@ -3022,13 +3002,8 @@ class ManifestParquetTable:
                 ],
                 "_fname string, bucket int, nb int, rows long",
             )
-            raw = self.spark.read.parquet(
-                *[os.path.join(self.path, fe["path"]) for fe in files]
-            ).select(
-                F.col(self.key).alias("_k"),
-                F.element_at(
-                    F.split(F.col("_metadata.file_path"), "/"), -1
-                ).alias("_fname"),
+            raw = self._read_files(files, m=m, positions=True).select(
+                F.col(self.key).alias("_k"), F.col("_dv_file").alias("_fname")
             )
             per_file = (
                 raw.join(F.broadcast(fmap), "_fname")

@@ -43,6 +43,7 @@ import uuid
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from rap_etl_spark.fsio import list_batches
 from rap_etl_spark.lake import META_DEL, META_LSN, ManifestParquetTable
 
 
@@ -220,16 +221,12 @@ def apply_published(
     (idempotent per batch via the table ledger): the sync-to-downstream
     consumer loop. Returns one summary dict per batch directory."""
     out = []
-    leaves = sorted(
-        (int(d.split("=", 1)[1]), d)
-        for d in os.listdir(log_dir)
-        if d.startswith("batch=")
-    )
     if fmt == "binlog":
         from rap_etl_spark.sources.binlog import register
 
         register(downstream.spark)
-    for bid, leaf in leaves:
+    for bid in list_batches(downstream.fs, log_dir):
+        leaf = f"batch={bid}"
         if downstream.is_committed(bid):
             out.append({"batch_id": bid, "applied": 0, "skipped": True})
             continue

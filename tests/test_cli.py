@@ -4,6 +4,7 @@ against the session fixture (cli reuses the active SparkSession)."""
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from rap_etl_spark.cli import main
@@ -425,6 +426,60 @@ def test_cli_feed_topic_replicates_downstream(spark, sf_small, tmp_path, capsys)
     assert s.count() == r.count()
 
 
+@pytest.mark.parametrize("seeded", [2_000, 40_000])
+def test_cli_topic_feed_of_a_mor_batch_reads_only_its_delta_files(
+    spark, tmp_path, capsys, monkeypatch, seeded
+):
+    """`feed --format topic --batch` publishes a MoR batch from the delta
+    files its commit wrote (``publish.batch_events``): the same 200-key
+    batch reads the same files whatever the table size, and the topic
+    carries one event per staged key."""
+    import os
+
+    from rap_etl_spark.lake import ManifestParquetTable
+    from rap_etl_spark.schemas import DOCS_SCHEMA
+    from rap_etl_spark.sources import topic as topic_mod
+
+    src = str(tmp_path / "src")
+    t = ManifestParquetTable.create(
+        spark, src, DOCS_SCHEMA, n_buckets=4, merge_mode="mor"
+    )
+
+    def batch(lo, hi, step, lsn0):
+        return spark.range(lo, hi, step).select(
+            F.format_string("k%06d", "id").alias("doc_id"),
+            F.lit("U").alias("op"),
+            (F.col("id") + lsn0).alias("lsn"),
+            F.array(F.col("id").cast("int")).alias("tokens"),
+            F.lit(1).alias("n_tok"),
+            F.lit("s").alias("source"),
+        )
+
+    t.merge(batch(0, seeded, 1, 0), batch_id=0)
+    t.materialize_deltas()
+    before = {fe["path"] for fe in t._manifest()["files"]}
+    t.merge(batch(0, 2_000, 10, seeded), batch_id=1)
+    written = [fe for fe in t._manifest()["files"] if fe["path"] not in before]
+    assert written and all(fe["kind"] == "delta" for fe in written)
+
+    fed = []
+    real = topic_mod.write_topic
+
+    def spy(ev, out, partitions):
+        fed.append(ev)
+        return real(ev, out, partitions)
+
+    monkeypatch.setattr(topic_mod, "write_topic", spy)
+    rec = _run(capsys, "feed", "--table", src, "--out", str(tmp_path / "topic"),
+               "--format", "topic", "--batch", "1", "--partitions", "2")
+    assert rec[-1]["published"] is True
+    (ev,) = fed
+    assert sorted(os.path.basename(p) for p in ev.inputFiles()) == sorted(
+        os.path.basename(fe["path"]) for fe in written
+    )
+    assert ev.count() == 200
+
+
 def test_cli_feed_envelope_parses_back(spark, sf_small, tmp_path, capsys):
     """Envelope feed: the batch=N JSON-lines leaf decodes with the inbound
     parser to exactly the batch's postimage change rows; republish is a
@@ -582,10 +637,12 @@ def test_cli_replication_topology_three_hops(spark, sf_small, tmp_path, capsys):
 def test_cli_feed_catchup_marks_expired_batches_permanently(
     spark, sf_small, tmp_path, capsys
 ):
-    """A batch whose snapshot pair was expired before it was ever fed is
+    """A batch whose commit snapshot was expired before it was ever fed is
     unrecoverable from this table: catch-up surfaces it ONCE with a
     permanent skip marker in the feed ledger, then never retries it —
-    and still publishes every batch retention kept."""
+    and still publishes every batch retention kept. A CoW batch feeds
+    from the change files its commit snapshot lists, so keeping only the
+    newest snapshot expires batches 0 and 1 and keeps batch 2."""
     from rap_etl_spark.lake import ManifestParquetTable
 
     log, src, topic = (
@@ -597,7 +654,7 @@ def test_cli_feed_catchup_marks_expired_batches_permanently(
     _run(capsys, "replay", "--table", src, "--log", log)
 
     ManifestParquetTable(spark, src).expire_snapshots(
-        keep=2, orphan_grace_sec=0.0
+        keep=1, orphan_grace_sec=0.0
     )
     rec = _run(capsys, "feed", "--table", src, "--out", topic,
                "--partitions", "2")

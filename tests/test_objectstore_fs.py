@@ -267,3 +267,18 @@ def test_change_files_live_and_die_with_their_snapshot(spark, tmp_path, backend)
         {"check": "missing_change", "path": os.path.join("data", victim)}
     ]
     assert cli_main(["fsck", "--table", path, "--shallow"]) == 1
+
+
+@pytest.mark.parametrize("backend", [PosixFS, ObjectStoreFS], ids=["posix", "objectstore"])
+def test_list_batches_orders_numerically_and_skips_staging(tmp_path, backend):
+    """``fsio.list_batches`` lists ``batch=<id>`` leaves through the
+    backend in numeric order and ignores a publish's ``_tmp-*`` staging
+    dir, ``_SUCCESS`` and names that are not a canonical batch leaf."""
+    from rap_etl_spark.fsio import list_batches
+
+    fs = backend()
+    names = ("batch=10", "batch=9", "batch=0", "_tmp-1a2b3c4d", "batch=07", "batch=x")
+    for name in names:
+        fs.makedirs(str(tmp_path / name))
+    fs.write_text(str(tmp_path / "_SUCCESS"), "")
+    assert list_batches(fs, str(tmp_path)) == [0, 9, 10]

@@ -749,3 +749,68 @@ def test_hinted_cow_merge_starts_no_extra_job(spark, tmp_path):
     t.merge(_cow_batch(spark, 1), batch_id=1, affected_buckets={0, 1}, n_rows=20)
     jobs = set(tracker.getJobIdsForGroup()) - before
     assert len(jobs) == 4, sorted(jobs)
+
+
+def test_one_data_file_scan_and_no_manifest_swap():
+    """``ManifestParquetTable._read_files`` is the one data-file scan in
+    ``lake.py``: Spark's ``_metadata`` file path and row index are read
+    nowhere else, and every other parquet read is of DV files
+    (``_dv_frame`` and the DV commit's staging read-back). A snapshot
+    read passes its manifest to the scan instead of swapping it into
+    ``_manifest_cache``, which only its owners write."""
+    import ast
+    import inspect
+
+    from rap_etl_spark import lake
+
+    src = inspect.getsource(lake)
+    tree = ast.parse(src)
+    table = "ManifestParquetTable"
+
+    def scopes(node, needle, scope=()):
+        if isinstance(node, (ast.ClassDef, ast.FunctionDef)):
+            scope = (*scope, node.name)
+        if needle(node):
+            yield scope
+        for child in ast.iter_child_nodes(node):
+            yield from scopes(child, needle, scope)
+
+    def metadata_col(n):
+        return isinstance(n, ast.Constant) and isinstance(n.value, str) and any(
+            c in n.value for c in ("_metadata.file_path", "_metadata.row_index")
+        )
+
+    def parquet_read(n):
+        if not (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)):
+            return False
+        if n.func.attr != "parquet":
+            return False
+        node = n.func.value
+        while isinstance(node, (ast.Call, ast.Attribute)):
+            if isinstance(node, ast.Attribute) and node.attr == "read":
+                return True
+            node = node.func if isinstance(node, ast.Call) else node.value
+        return False
+
+    def cache_write(n):
+        targets = (
+            n.targets
+            if isinstance(n, ast.Assign)
+            else [n.target] if isinstance(n, (ast.AugAssign, ast.AnnAssign)) else []
+        )
+        return any(
+            isinstance(t, ast.Attribute) and t.attr == "_manifest_cache" for t in targets
+        )
+
+    assert set(scopes(tree, metadata_col)) == {(table, "_read_files")}
+    assert sorted(scopes(tree, parquet_read)) == [
+        (table, "_delete_where_dv"),
+        (table, "_dv_frame"),
+        (table, "_read_files"),
+    ]
+    assert set(scopes(tree, cache_write)) == {
+        (table, "__init__"),
+        (table, "_manifest"),
+        (table, "_write_manifest"),
+    }
+    assert "_read_files_of" not in src

@@ -543,3 +543,36 @@ def test_cow_key_only_table_publishes_its_change_files(spark, tmp_path):
         ("a", "D", 3), ("c", "U", 4),
     ]
     assert sorted(r["doc_id"] for r in t.read().collect()) == ["b", "c"]
+
+
+def test_key_only_table_publishes_its_snapshot_diff(spark, tmp_path):
+    """Commits with no recorded change rows (a CoW delete, a DV delete, an
+    append) publish their snapshot diff, which on a table with no payload
+    column compares rows by ``_lsn`` alone; a replica fed the leaves
+    converges."""
+    key_only = T.StructType([T.StructField("doc_id", T.StringType())])
+    t = ManifestParquetTable.create(spark, str(tmp_path / "t"), key_only, n_buckets=2)
+    rows = "doc_id string, op string, lsn long"
+    t.merge(
+        spark.createDataFrame([("a", "U", 1), ("b", "U", 2), ("c", "U", 3)], rows),
+        batch_id=0,
+    )
+    t.delete_where("doc_id = 'a'", mode="cow", batch_id=1)
+    t.delete_where("doc_id = 'b'", mode="dv", batch_id=2)
+    t.append(spark.createDataFrame([("d",)], "doc_id string"), batch_id=3)
+    want = {
+        1: [("a", "delete", 1)],
+        2: [("b", "delete", 2)],
+        3: [("d", "insert", None)],
+    }
+    feed = str(tmp_path / "feed")
+    assert publish_changes(t, 0, feed)["rows"] == 3
+    for b, rows_b in want.items():
+        got = t.changes_for_batch(b).collect()
+        assert sorted(tuple(r) for r in got) == rows_b
+        assert publish_changes(t, b, feed)["rows"] == 1
+    down = ManifestParquetTable.create(
+        spark, str(tmp_path / "down"), key_only, n_buckets=2
+    )
+    apply_published(down, feed)
+    assert sorted(r["doc_id"] for r in down.read().collect()) == ["c", "d"]
