@@ -657,8 +657,10 @@ class ManifestParquetTable:
     def constraints(self) -> dict[str, str]:
         """Table CHECK constraints (Delta `ALTER TABLE ADD CONSTRAINT`
         parity): name -> SQL boolean expression over the logical schema,
-        validated against every incoming live row at merge/append time.
-        NULL evaluates as pass (SQL-standard CHECK semantics)."""
+        validated against every incoming live row at merge/append time —
+        ``update_where``'s post-images included, since they commit through
+        ``merge`` (delete tombstones are exempt). NULL evaluates as pass
+        (SQL-standard CHECK semantics)."""
         return dict(self._manifest().get("constraints", {}))
 
     def set_constraint(self, name: str, expr: str) -> None:
@@ -1138,13 +1140,13 @@ class ManifestParquetTable:
     def batch_delta_rows(self, batch_id: int) -> DataFrame | None:
         """The change rows one batch's commit wrote itself, with ``_lsn``
         and ``_del``, or None when it wrote none — a DV delete, an append,
-        a CoW DML commit, or a commit from before change files existed,
-        whose change set only a snapshot diff recovers
-        (``changes_for_batch``).
+        or a commit from before change files existed, whose change set
+        only a snapshot diff recovers (``changes_for_batch``).
 
         - A CoW ``merge`` records its change files (``changes``): the rows
-          the diff reports, deletes carrying the removed row. An empty set
-          is an empty frame that starts no job.
+          the diff reports, deletes carrying the removed row. CoW DML
+          commits through ``merge`` and records them the same way. An
+          empty set is an empty frame that starts no job.
         - A commit that only appended delta files (every MoR ``merge`` and
           MoR DML commit) yields those files' rows, one per key the commit
           staged — rows that lose to a stored newer version at read time
@@ -1386,7 +1388,11 @@ class ManifestParquetTable:
         return nxt
 
     def _with_meta(self, df: DataFrame, schema: T.StructType) -> DataFrame:
-        """Normalize to physical layout: logical columns + _lsn + _del."""
+        """Normalize to physical layout: logical columns + _lsn + _del. The
+        version and tombstone flag come from ``_lsn``/``_del`` when the
+        frame carries them (physical rows, e.g. DML post-images, whose
+        payload may itself hold columns named ``lsn`` or ``op``), else from
+        the wire ``lsn``/``op`` of a CDC change frame."""
         have = set(df.columns)
         cols = []
         for f in schema.fields:
@@ -1394,16 +1400,16 @@ class ManifestParquetTable:
                 cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
             else:
                 cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        if "lsn" in have:
-            lsn_expr = F.col("lsn").cast("long")
-        elif META_LSN in have:
+        if META_LSN in have:
             lsn_expr = F.col(META_LSN).cast("long")
+        elif "lsn" in have:
+            lsn_expr = F.col("lsn").cast("long")
         else:
             lsn_expr = F.lit(None).cast("long")
-        if "op" in have:
-            del_expr = F.col("op") == F.lit("D")
-        elif META_DEL in have:
+        if META_DEL in have:
             del_expr = F.coalesce(F.col(META_DEL), F.lit(False))
+        elif "op" in have:
+            del_expr = F.col("op") == F.lit("D")
         else:
             del_expr = F.lit(False)
         return df.select(*cols, lsn_expr.alias(META_LSN), del_expr.alias(META_DEL))
@@ -2089,55 +2095,51 @@ class ManifestParquetTable:
     # ---------- predicate DML (DELETE FROM / UPDATE ... WHERE) ----------
     def _dml_commit(
         self,
-        matched: DataFrame,
-        transform,
+        m: dict,
+        condition,
+        payload: list[Column],
+        delete: bool,
         mode: str,
         batch_id: int | None,
     ) -> CommitInfo:
-        """Shared tail of delete_where/update_where. ``matched`` carries the
-        post-DML images of matching rows (physical layout + ``_b``);
-        ``transform(df) -> df`` rewrites a resolved with-meta frame to its
-        post-DML image (CoW only).
-
-        - cow: affected buckets = buckets with >= 1 match (ONE tiny driver
-          collect of <= n_buckets group rows); ONLY those buckets' files
-          are then re-read, transformed, and rewritten — unaffected
-          buckets are never touched, read or written.
-        - mor: commit just the matched rows' post-images as delta files —
-          write O(matches); resolution shadows the old row because the
-          post-image keeps the row's (_lsn, _del) and gains a higher seq
-          (same-version tiebreak: deletes win by d, updates by seq).
-        """
-        m = self._manifest()
+        """Shared tail of delete_where/update_where: the post-DML images of
+        the live rows matching ``condition`` (str or Column over the
+        logical schema) — the key, ``payload`` (every other logical
+        column, projected from the matched row), the row's own ``_lsn``
+        and ``_del`` = ``delete`` — committed through ``merge``'s hinted
+        call. One tiny driver collect of <= n_buckets group rows over the
+        pinned images yields the affected buckets and the ledger row
+        count; no match commits nothing. ``merge`` then validates the
+        CHECK constraints and applies its version rule, which an image
+        wins on its equal ``_lsn`` (a tombstone by its ``_del``): a cow
+        commit rewrites only the affected buckets and writes its change
+        files, a mor commit writes the images as delta files that shadow
+        the old rows by their higher seq."""
         if skip := self._skipped(m, batch_id):
             return skip
-        if mode == "mor":
-            matched = matched.persist()
-            try:
-                rows = int(matched.count())
-                if rows == 0:
-                    return CommitInfo(m["snapshot_id"], batch_id, 0, skipped=True)
-                nxt = self._rewrite(m, matched, m["files"], kind="delta")
-                return self._commit(nxt, batch_id, rows)
-            finally:
-                matched.unpersist()
-        stats = matched.groupBy("_b").agg(F.count(F.lit(1)).alias("_n")).collect()
-        affected = {r["_b"] for r in stats}
-        rows = int(sum(r["_n"] for r in stats))
-        if not affected:
-            return CommitInfo(m["snapshot_id"], batch_id, 0, skipped=True)
-        # every matched key's bucket is in `affected`, so residue matching
-        # pulls that key's FULL stack (pre-split bases included); stale
-        # pass-through rows of other keys re-resolve against their kept
-        # deltas at read time (same argument as the merge path)
-        old_entries, keep_entries = _bucket_zones(
-            affected, int(m["n_buckets"])
-        ).split(m["files"], int(m["n_buckets"]))
-        schema = self.schema()
-        post = transform(
-            self._read_resolved(old_entries, schema, with_meta=True)
-        ).withColumn("_b", self._bucket_expr(self.key))
-        return self._commit(self._rewrite(m, post, keep_entries), batch_id, rows)
+        cond = F.expr(condition) if isinstance(condition, str) else condition
+        live = ~F.coalesce(F.col(META_DEL), F.lit(False))
+        post = (
+            self._read_resolved(m["files"], self.schema(), with_meta=True)
+            .filter(live & cond)
+            .select(self.key, *payload, F.col(META_LSN), F.lit(delete).alias(META_DEL))
+            .withColumn("_b", self._bucket_expr(self.key))
+            .persist()
+        )
+        try:
+            stats = post.groupBy("_b").agg(F.count(F.lit(1)).alias("_n")).collect()
+            if not stats:
+                return CommitInfo(m["snapshot_id"], batch_id, 0, skipped=True)
+            return self.merge(
+                post,
+                batch_id=batch_id,
+                mode=mode,
+                affected_buckets={r["_b"] for r in stats},
+                n_rows=sum(r["_n"] for r in stats),
+                affected_buckets_nb=int(m["n_buckets"]),
+            )
+        finally:
+            post.unpersist()
 
     def delete_where(
         self,
@@ -2147,15 +2149,24 @@ class ManifestParquetTable:
     ) -> CommitInfo:
         """``DELETE FROM table WHERE condition`` (Iceberg/Delta DML parity;
         the GDPR/right-to-erasure path of a training-data lake). Matching
-        LIVE rows become tombstones with their payload NULLED OUT — the
-        data is physically gone after the rewrite (CoW) or after the next
-        materialization (MoR), not merely masked. The tombstone keeps the
-        row's ``_lsn``, so a later CDC event with a higher LSN can still
+        LIVE rows become tombstones with their payload NULLED OUT and are
+        committed through ``merge``. The tombstone keeps the row's
+        ``_lsn``, so a later CDC event with a higher LSN can still
         legitimately recreate the key, while same-or-older replays cannot
         resurrect the deleted payload (delete wins the same-version
         tiebreak). ``condition``: str or Column over the logical schema.
-        Cost: one column-pruned scan to find matches + a write sized by
-        mode (affected buckets for cow, matches only for mor).
+
+        Erasure: the payload leaves the live files with the rewrite (cow)
+        or with the next materialization (mor). A cow delete's change file
+        carries the removed row, as the snapshot diff reports it, so the
+        payload stays on disk for as long as the delete's commit snapshot
+        (and, for the old base files, its parent) is retained;
+        ``expire_snapshots`` past it removes the last copy.
+
+        Cost: one scan of the matching rows, pinned, plus one collect of
+        <= n_buckets rows; then, for cow, the merge's full-outer join of
+        the affected buckets against the tombstones (one shuffle per side)
+        and their rewrite, or, for mor, a write of the tombstones only.
 
         ``mode='dv'`` writes a DELETION VECTOR instead (Iceberg v3
         position deletes): see ``_delete_where_dv``."""
@@ -2165,44 +2176,12 @@ class ManifestParquetTable:
             return self._delete_where_dv(condition, batch_id)
         if mode not in ("cow", "mor"):
             raise ValueError(f"mode must be 'cow', 'mor' or 'dv', got {mode!r}")
-        schema = self.schema()
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        live = ~F.coalesce(F.col(META_DEL), F.lit(False))
-        df = self._read_resolved(m["files"], schema, with_meta=True)
-        payload = [f.name for f in schema.fields if f.name != self.key]
         tombstone = [
             F.lit(None).cast(f.dataType).alias(f.name)
-            for f in schema.fields
+            for f in self.schema().fields
             if f.name != self.key
         ]
-        hit = live & cond
-        if mode == "mor":
-            matched = (
-                df.filter(hit)
-                .select(
-                    self.key,
-                    *tombstone,
-                    F.col(META_LSN),
-                    F.lit(True).alias(META_DEL),
-                )
-                .withColumn("_b", self._bucket_expr(self.key))
-            )
-            return self._dml_commit(matched, None, mode, batch_id)
-        matched = (
-            df.filter(hit)
-            .select(self.key)
-            .withColumn("_b", self._bucket_expr(self.key))
-        )
-
-        def transform(affected_df: DataFrame) -> DataFrame:
-            return affected_df.select(
-                self.key,
-                *[F.when(hit, None).otherwise(F.col(c)).alias(c) for c in payload],
-                F.col(META_LSN),
-                (F.coalesce(F.col(META_DEL), F.lit(False)) | hit).alias(META_DEL),
-            )
-
-        return self._dml_commit(matched, transform, mode, batch_id)
+        return self._dml_commit(m, condition, tombstone, True, mode, batch_id)
 
     def _delete_where_dv(self, condition, batch_id: int | None = None) -> CommitInfo:
         """``DELETE FROM ... WHERE`` as an Iceberg-v3-style DELETION
@@ -2604,9 +2583,14 @@ class ManifestParquetTable:
         source, patch a mis-tokenized field). ``assignments`` maps column
         name -> Column/str expr evaluated against the matching row; the
         key column cannot be assigned. Updated rows keep their ``_lsn``
-        (a DML patch is not a CDC event — later change events still win),
-        and in MoR mode the patch shadows the old row purely through its
-        higher commit seq."""
+        (a DML patch is not a CDC event — later change events still win)
+        and are committed through ``merge``, so they must pass the table's
+        CHECK constraints (``ConstraintViolationError`` otherwise, nothing
+        committed), a cow commit records its change files, and in mor mode
+        the patch shadows the old row purely through its higher commit
+        seq. Cost as ``delete_where``: a pinned scan of the matching rows,
+        then, for cow, the merge's full-outer join of the affected buckets
+        (one shuffle per side)."""
         m = self._manifest()
         mode = mode or m.get("merge_mode", "cow")
         if mode not in ("cow", "mor"):
@@ -2617,52 +2601,17 @@ class ManifestParquetTable:
         unknown = set(assignments) - {f.name for f in schema.fields}
         if unknown:
             raise ValueError(f"unknown columns in assignments: {sorted(unknown)}")
-        cond = F.expr(condition) if isinstance(condition, str) else condition
         assigns = {
             c: (F.expr(e) if isinstance(e, str) else e) for c, e in assignments.items()
         }
-        live = ~F.coalesce(F.col(META_DEL), F.lit(False))
-        hit = live & cond
-        df = self._read_resolved(m["files"], schema, with_meta=True)
-        by_name = {f.name: f for f in schema.fields}
-
-        def out_col(c: str):
-            if c in assigns:
-                return (
-                    F.when(hit, assigns[c].cast(by_name[c].dataType))
-                    .otherwise(F.col(c))
-                    .alias(c)
-                )
-            return F.col(c).alias(c)
-
-        payload = [f.name for f in schema.fields if f.name != self.key]
-        if mode == "mor":
-            matched = (
-                df.filter(hit)
-                .select(
-                    self.key,
-                    *[out_col(c) for c in payload],
-                    F.col(META_LSN),
-                    F.col(META_DEL),
-                )
-                .withColumn("_b", self._bucket_expr(self.key))
-            )
-            return self._dml_commit(matched, None, mode, batch_id)
-        matched = (
-            df.filter(hit)
-            .select(self.key)
-            .withColumn("_b", self._bucket_expr(self.key))
-        )
-
-        def transform(affected_df: DataFrame) -> DataFrame:
-            return affected_df.select(
-                self.key,
-                *[out_col(c) for c in payload],
-                F.col(META_LSN),
-                F.col(META_DEL),
-            )
-
-        return self._dml_commit(matched, transform, mode, batch_id)
+        patched = [
+            assigns[f.name].cast(f.dataType).alias(f.name)
+            if f.name in assigns
+            else F.col(f.name)
+            for f in schema.fields
+            if f.name != self.key
+        ]
+        return self._dml_commit(m, condition, patched, False, mode, batch_id)
 
     def rollback(self, snapshot_id: str) -> CommitInfo:
         """Restore the table to an earlier snapshot's state as a NEW commit

@@ -10,10 +10,11 @@ After a batch commits, its events (`batch_events`) are published to a
 per-batch leaf under a downstream log directory. A commit that wrote its
 own change rows publishes them: one scan and projection sized by the
 batch, the way Delta Lake's change-data files and Iceberg's incremental
-read serve a commit's own files. A copy-on-write merge writes its change
-files beside the rewritten buckets in the same job (exactly the rows the
-snapshot diff reports); a merge-on-read merge or MoR DML commit's delta
-files are its change rows. Every other commit (CoW DML, a
+read serve a commit's own files. A copy-on-write merge, CoW DML
+(``delete_where``/``update_where`` commit through ``merge``) included,
+writes its change files beside the rewritten buckets in the same job
+(exactly the rows the snapshot diff reports); a merge-on-read merge or
+MoR DML commit's delta files are its change rows. Every other commit (a
 deletion-vector delete, an append) publishes the bucket-pruned manifest
 diff of its snapshot against the parent (`changes_for_batch`).
 Exactly-once by construction:
@@ -68,12 +69,13 @@ def batch_events(table: ManifestParquetTable, batch_id: int) -> DataFrame:
     """One committed batch as CDC events ``(key, payload..., op, lsn)``.
 
     A commit that wrote its own change rows (``batch_delta_rows``: the
-    change files of a CoW merge, the delta files of a MoR commit) yields
+    change files of a CoW merge or CoW DML commit, the delta files of a
+    MoR commit) yields
     those rows as a changefeed (a delete where ``_del`` is set, else an
     insert, versioned by ``_lsn``) — one scan and a projection. A CoW
     merge's rows are exactly its snapshot diff's events, deletes carrying
     the removed row; a MoR delete carries a NULL payload. Any other
-    commit yields its snapshot diff. Both become events through
+    commit (a DV delete, an append) yields its snapshot diff. Both become events through
     ``changes_to_events``, so a payload column named ``op`` or ``lsn`` is
     replaced the same way on every path. All raise ValueError once the
     batch's snapshots are out of retention."""
@@ -138,12 +140,13 @@ def publish_changes(
     """Publish one committed batch's events (``batch_events``) to
     `out_dir/batch=<id>`.
 
-    A CoW merge publishes the change files it wrote, which hold its
-    snapshot diff's rows (post-images, and deletes with their pre-image
-    payload); a commit that only appended delta files (MoR merges and MoR
-    DML) publishes the rows of those files, with NULL payloads on
-    deletes, so its ``rows`` equals the ledger's ``event_count``; every
-    other commit publishes its snapshot diff. Returns {"batch_id",
+    A CoW merge or CoW DML commit publishes the change files it wrote,
+    which hold its snapshot diff's rows (post-images, and deletes with
+    their pre-image payload); a commit that only appended delta files (MoR
+    merges and MoR DML) publishes the rows of those files, with NULL
+    payloads on deletes, so its ``rows`` equals the ledger's
+    ``event_count``; every other commit (a DV delete, an append)
+    publishes its snapshot diff. Returns {"batch_id",
     "published", "rows"} — published=False when the leaf already exists
     (idempotent redelivery), plus "error" when the batch's snapshots are
     out of retention.

@@ -76,3 +76,25 @@ def test_drop_constraint_and_bad_expr(spark, tmp_path):
     with pytest.raises(Exception):
         t.set_constraint("broken", "no_such_col >")
     assert "broken" not in t.constraints()
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_update_where_validates_constraints(spark, tmp_path, mode):
+    """An ``update_where`` is checked like a merge: a post-image that
+    breaks a constraint refuses the whole commit. A ``delete_where`` of
+    rows that break a constraint added later still commits, because its
+    tombstones are exempt."""
+    t = mk_table(spark, str(tmp_path / "t"), merge_mode=mode)
+    t.merge(ch(spark, [("a", "U", 1, 5, "wiki"), ("b", "U", 2, 6, "crawl")]), batch_id=0)
+    t.set_constraint("pos", "n_tok > 0")
+    sid = t.snapshot_id()
+    with pytest.raises(ConstraintViolationError, match="pos"):
+        t.update_where("doc_id = 'b'", {"n_tok": "-7"}, batch_id=1)
+    assert t.snapshot_id() == sid and not t.is_committed(1)
+    assert {r["doc_id"]: r["n_tok"] for r in t.read().collect()} == {"a": 5, "b": 6}
+
+    t.update_where("doc_id = 'b'", {"n_tok": "n_tok + 1"}, batch_id=1)
+    t.set_constraint("wiki_only", "source = 'wiki'")
+    info = t.delete_where("source = 'crawl'", batch_id=2)
+    assert not info.skipped and info.rows_written == 1
+    assert {r["doc_id"]: r["n_tok"] for r in t.read().collect()} == {"a": 5}

@@ -103,17 +103,34 @@ def test_update_rejects_bad_assignments(spark, tmp_path):
         t.update_where("val < 0", {"nope": "1"})
 
 
-def test_dml_keeps_lww_semantics(spark, tmp_path):
+# payload columns that share the names of a CDC frame's wire columns
+WIRE_NAMED = T.StructType(
+    SCHEMA.fields
+    + [T.StructField("lsn", T.LongType()), T.StructField("op", T.StringType())]
+)
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+@pytest.mark.parametrize("schema", [SCHEMA, WIRE_NAMED], ids=["plain", "lsn_op_payload"])
+def test_dml_keeps_lww_semantics(spark, tmp_path, schema, mode):
     """A DML patch keeps the row's _lsn, so later CDC events still win and
-    a delete tombstone cannot be resurrected by an older event."""
-    t = ManifestParquetTable.create(spark, str(tmp_path / "t"), SCHEMA, n_buckets=4)
+    a delete tombstone cannot be resurrected by an older event. The
+    version is the row's ``_lsn`` even where the payload has columns named
+    ``lsn``/``op``: a patch that sets payload ``lsn`` above the next
+    event's version does not outvote that event."""
+    t = ManifestParquetTable.create(
+        spark, str(tmp_path / "t"), schema, n_buckets=4, merge_mode=mode
+    )
     ch = spark.createDataFrame(
         [("a", "U", 5, 10, "wiki"), ("b", "U", 6, 20, "crawl")],
         "doc_id string, op string, lsn long, val long, src string",
     )
     t.merge(ch, batch_id=0)
     t.delete_where("doc_id = 'a'")
-    t.update_where("doc_id = 'b'", {"val": "99"})
+    patch = {"val": "99"}
+    if "lsn" in schema.fieldNames():
+        patch["lsn"] = "100"
+    t.update_where("doc_id = 'b'", patch)
     # older event than a's original lsn 5: must NOT resurrect
     t.merge(
         spark.createDataFrame(
@@ -131,6 +148,48 @@ def test_dml_keeps_lww_semantics(spark, tmp_path):
         batch_id=2,
     )
     assert state(t) == {"b": (21, "crawl")}
+
+
+def test_cow_delete_payload_lives_until_its_snapshot_expires(spark, tmp_path):
+    """A CoW delete nulls the payload in the live files, and its change
+    file keeps the removed row for publishing while the delete's commit
+    snapshot is retained. Expiring past it leaves no data file, base or
+    change, that holds the erased key with a payload."""
+    import os
+
+    t = mk_table(spark, str(tmp_path / "t"))
+    t.merge(
+        spark.createDataFrame(
+            [("f", "U", 1, 60, "wiki")],
+            "doc_id string, op string, lsn long, val long, src string",
+        ),
+        batch_id=1,
+    )
+    t.delete_where("doc_id = 'f'", batch_id=2)
+    data = str(tmp_path / "t" / "data")
+
+    def payload_copies(prefix):
+        n = 0
+        for fn in os.listdir(data):
+            if fn.startswith(prefix) and fn.endswith(".parquet"):
+                df = spark.read.parquet(os.path.join(data, fn))
+                n += df.filter(
+                    (F.col("doc_id") == "f")
+                    & (F.col("val").isNotNull() | F.col("src").isNotNull())
+                ).count()
+        return n
+
+    assert payload_copies("c") == 2  # the insert's and the delete's change rows
+    t.merge(
+        spark.createDataFrame(
+            [("a", "U", 9, 11, "wiki")],
+            "doc_id string, op string, lsn long, val long, src string",
+        ),
+        batch_id=3,
+    )
+    t.expire_snapshots(keep=1, orphan_grace_sec=0)
+    assert payload_copies("b") == payload_copies("c") == 0
+    assert "f" not in state(t)
 
 
 def test_dml_idempotent_batch_id(spark, tmp_path):

@@ -648,6 +648,37 @@ def test_one_write_back_path_and_one_storage_seam():
         assert raw not in requeue, raw
 
 
+def test_row_dml_commits_through_merge():
+    """Predicate DML has no write-back path of its own: ``delete_where``
+    and ``update_where`` hand their post-images to the shared tail
+    ``_dml_commit``, which commits them with ``merge`` and never rewrites
+    files or writes the ledger itself."""
+    import ast
+    import inspect
+    import textwrap
+
+    from rap_etl_spark.lake import ManifestParquetTable
+
+    def self_calls(name):
+        src = textwrap.dedent(inspect.getsource(getattr(ManifestParquetTable, name)))
+        return {
+            n.func.attr
+            for n in ast.walk(ast.parse(src))
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and isinstance(n.func.value, ast.Name)
+            and n.func.value.id == "self"
+        }
+
+    writers = {"_rewrite", "_commit", "_write_data_files", "_write_manifest"}
+    calls = {n: self_calls(n) for n in ("delete_where", "update_where", "_dml_commit")}
+    for name, got in calls.items():
+        assert not got & writers, (name, got)
+    assert "merge" in calls["_dml_commit"]
+    for name in ("delete_where", "update_where"):
+        assert "_dml_commit" in calls[name] and "merge" not in calls[name], name
+
+
 def test_mor_batch_events_plan_is_scan_and_project(spark, tmp_path):
     """A MoR batch publishes the delta files its commit wrote: the events
     frame plans as a scan and a projection, with no join, aggregate or

@@ -424,7 +424,10 @@ def test_cow_batch_events_equal_the_snapshot_diff(spark, tmp_path):
     event, an identical re-upsert, deletes of a present and an absent key,
     patch updates, a hinted bootstrap into empty buckets, a CoW merge over
     MoR deltas, a merge after ``split_buckets`` that migrates old-modulus
-    files, and a merge over a deletion-vector-masked file. A re-publish
+    files, and a merge over a deletion-vector-masked file. CoW DML
+    publishes its own change files the same way: a delete of an appended
+    (unversioned) row, an update to the stored value (no rows), and DML
+    after the split, over MoR deltas and over a masked file. A re-publish
     after the leaf was deleted writes identical rows."""
     from rap_etl_spark.publish import changes_to_events
 
@@ -470,12 +473,42 @@ def test_cow_batch_events_equal_the_snapshot_diff(spark, tmp_path):
     t.delete_where(F.col("doc_id") == high[0], mode="dv", batch_id=7)
     merge([(high[0], "U", 90, 5, "dv"), (high[1], "U", 91, 6, "dv")], 8)
 
+    # copy-on-write DML, after the split
+    def dml(op, batch_id, *args):
+        getattr(t, op)(*args, mode="cow", batch_id=batch_id)
+        cow.append(batch_id)
+
+    t.append(
+        spark.createDataFrame([(low[8], 3, "app")], "doc_id string, val long, src string"),
+        batch_id=9,
+    )
+    dml("delete_where", 10, F.col("doc_id") == low[8])  # a NULL-_lsn row
+    dml("update_where", 11, F.col("doc_id") == c, {"val": "val"})  # stored value
+    dml("update_where", 12, "src IN ('s', 'w')", {"val": "val + 100"})
+    # over buckets with MoR deltas
+    t.merge(ch(spark, [(low[9], "U", 100, 9, "m2"), (a, "U", 101, 8, "m2")]),
+            batch_id=13, mode="mor")
+    dml("update_where", 14, "src = 'm2'", {"src": "'m3'"})
+    t.merge(ch(spark, [(low[9], "U", 110, 10, "m4")]), batch_id=15, mode="mor")
+    dml("delete_where", 16, "src = 'm4'")
+    # over a deletion-vector-masked file: three fresh keys in one bucket
+    fresh = [k for k in _keys_in_buckets(spark, t, {5}, n=200) if int(k[1:]) >= 40][:3]
+    merge([(k, "U", 120 + i, i, "f") for i, k in enumerate(fresh)], 17)
+    t.delete_where(F.col("doc_id") == fresh[0], mode="dv", batch_id=18)
+    assert any(fe.get("dv") and fe["bucket"] == 5 for fe in t._manifest()["files"])
+    dml("update_where", 19, "src = 'f'", {"val": "val * 10 + 1"})
+
     sizes = {}
     for bid in cow:
         want = _event_rows(changes_to_events(t.changes_for_batch(bid)))
         assert _event_rows(batch_events(t, bid)) == want, bid
+        assert t.batch_delta_rows(bid) is not None, bid
         sizes[bid] = sum(want.values())
-    assert sizes == {0: 5, 1: 3, 2: 2, 3: 4, 5: 3, 6: 3, 8: 2}
+    assert sizes == {
+        0: 5, 1: 3, 2: 2, 3: 4, 5: 3, 6: 3, 8: 2,
+        10: 1, 11: 0, 12: 3, 14: 2, 16: 1, 17: 3, 19: 2,
+    }
+    assert _event_rows(batch_events(t, 10)) == {(low[8], 3, "app", "D", 0): 1}
     deletes = [r for r in _event_rows(batch_events(t, 1)) if r[3] == "D"]
     assert deletes == [(d, 40, "w", "D", 21)]
 
@@ -524,6 +557,16 @@ def test_cow_batch_events_read_only_the_commits_change_files(spark, tmp_path, se
     assert ev.columns == ["doc_id", "val", "src", "op", "lsn"]
     assert ev.count() == 200
 
+    # a CoW delete_where publishes the change files its commit wrote too
+    t.delete_where("doc_id < 'k002000' AND val % 10 = 3", batch_id=2)
+    changes = t._manifest()["changes"]
+    assert changes and sum(fe["rows"] for fe in changes) == 200
+    ev = batch_events(t, 2)
+    assert _basenames(ev.inputFiles()) == _basenames(fe["path"] for fe in changes)
+    dead = ev.collect()
+    assert len(dead) == 200
+    assert all(r["op"] == "D" and r["val"] % 10 == 3 and r["src"] == "s" for r in dead)
+
 
 def test_cow_key_only_table_publishes_its_change_files(spark, tmp_path):
     """A table with no payload column merges and publishes: its rows
@@ -546,10 +589,10 @@ def test_cow_key_only_table_publishes_its_change_files(spark, tmp_path):
 
 
 def test_key_only_table_publishes_its_snapshot_diff(spark, tmp_path):
-    """Commits with no recorded change rows (a CoW delete, a DV delete, an
-    append) publish their snapshot diff, which on a table with no payload
-    column compares rows by ``_lsn`` alone; a replica fed the leaves
-    converges."""
+    """Commits with no recorded change rows (a DV delete, an append)
+    publish their snapshot diff, which on a table with no payload column
+    compares rows by ``_lsn`` alone; a CoW delete publishes its change
+    files, the same rows. A replica fed the leaves converges."""
     key_only = T.StructType([T.StructField("doc_id", T.StringType())])
     t = ManifestParquetTable.create(spark, str(tmp_path / "t"), key_only, n_buckets=2)
     rows = "doc_id string, op string, lsn long"
