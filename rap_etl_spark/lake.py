@@ -1207,7 +1207,9 @@ class ManifestParquetTable:
         encoded in the filename — keeps data/ flat (no partition-inference
         surprises when reading explicit file lists). A boolean `_chg` column
         is a second partition column of the same write: its true rows land
-        in change files (``c``-prefixed, entries ``kind: "change"``)."""
+        in change files (``c``-prefixed, entries ``kind: "change"``). Files
+        carry no key index: the sidecar blooms of ``build_key_blooms``,
+        sized from each file's row count, are the table's one key index."""
         staging = os.path.join(self.path, f"_staging-{sid}")
         # cluster by bucket before the write: one file per bucket instead of
         # (tasks x buckets) small files — same move as Iceberg's hash
@@ -1228,14 +1230,6 @@ class ManifestParquetTable:
         writer = clustered.write.mode("overwrite").partitionBy(
             "_b", *(["_chg"] if routed else [])
         )
-        # parquet bloom filter on the key column: row-group-level point
-        # lookup skipping for files whose [min,max] zone map overlaps the
-        # probe but doesn't contain it (the unsorted-file case zone maps
-        # can't help with). ~90KB/file at 50k expected NDV — the Spark
-        # scan applies it through normal filter pushdown, no reader change.
-        writer = writer.option(
-            f"parquet.bloom.filter.enabled#{self.key}", "true"
-        ).option(f"parquet.bloom.filter.expected.ndv#{self.key}", "50000")
         if max_rows_per_file:
             # split each sorted bucket into size-bounded files with
             # CONTIGUOUS key ranges — this is what makes the per-file
@@ -1781,7 +1775,11 @@ class ManifestParquetTable:
         ``_bucket_expr`` (xxhash64 seed 42 over the UTF-8 key, pmod nb), so
         they come from the same JVM function over the keys as a
         ``LocalRelation`` (``local_frame``): the optimizer folds the hashes
-        into constants on the driver, and the probe runs no Spark job."""
+        into constants on the driver, and the probe runs no Spark job.
+
+        Data files carry no parquet bloom, so a file the zone maps and
+        sidecar blooms cannot rule out is read whole; the ``isin`` filter
+        keeps the answer exact."""
         m = self._manifest()
         kdf = local_frame(self.spark, [(k,) for k in keys], f"{self.key} string")
         probe_rows = kdf.select(
@@ -1813,8 +1811,10 @@ class ManifestParquetTable:
         of the requested keys. After a sorted compaction
         (``compact(sort_cols=[key])``) each bucket's files hold disjoint
         key ranges, so a point lookup reads exactly one file per key —
-        Iceberg manifest-entry column-bounds pruning. Files without bounds
-        (pre-stats commits) are conservatively kept."""
+        Iceberg manifest-entry column-bounds pruning. Then the sidecar
+        blooms (``probes``) drop files that cannot hold any key. Files
+        without bounds (pre-stats commits) or without a sidecar are kept:
+        the table has no other key index, so ``lookup`` reads them."""
         skeys = sorted(str(k) for k in keys)
         out = []
         for fe in files:
@@ -1914,10 +1914,10 @@ class ManifestParquetTable:
 
     # ---------- maintenance ----------
     # compact, compact_buckets, materialize_deltas and rebucket are the
-    # rewrite_data_files family: each reads a resolved with-meta frame,
-    # applies the shared rules (_gc_tombstones, _prune_ledger_to) and
-    # writes back through _rewrite — the same snapshot-write sequence the
-    # merge, append and DML paths commit through.
+    # rewrite_data_files family (the two bucket-scoped ones share the
+    # _fold_zones tail): each reads a resolved with-meta frame, applies the
+    # shared rules (_gc_tombstones, _prune_ledger_to) and writes back
+    # through _rewrite — the sequence merge, append and DML commit through.
     def compact(
         self,
         tombstone_horizon_lsn: int | None = None,
@@ -2036,24 +2036,8 @@ class ManifestParquetTable:
             deltas = [fe for fe in deltas if req.hits(fe, nb)]
         if not deltas:
             return CommitInfo(m["snapshot_id"], None, 0, skipped=True)
-        schema = self.schema()
-        # everything sharing keys with a selected delta's zone joins the
-        # fold, CLOSED under key-sharing (post-split residue matching: a
-        # coarse pre-split base pulled in by one delta brings its finer
-        # sibling stacks too — their deltas leave via the same rewrite);
-        # the write re-clusters at the current modulus, migrating any
-        # pre-split file it touches
-        target, keep = _closure_split(
-            m["files"],
-            _BucketZones((fe["bucket"], _entry_nb(fe, nb)) for fe in deltas),
-            nb,
-        )
-        df = self._read_resolved(target, schema, with_meta=True).withColumn(
-            "_b", self._bucket_expr(self.key)
-        )
-        nxt = self._rewrite(m, df, keep)
-        self._write_manifest(nxt)
-        return CommitInfo(nxt["snapshot_id"], None, -1)
+        zones = _BucketZones((fe["bucket"], _entry_nb(fe, nb)) for fe in deltas)
+        return self._fold_zones(m, zones, None)
 
     def compact_buckets(
         self, buckets: set[int], tombstone_horizon_lsn: int | None = None
@@ -2068,12 +2052,20 @@ class ManifestParquetTable:
         compact()s. Optionally GCs tombstones at/below the horizon
         (``_gc_tombstones``, the rule compact() applies)."""
         m = self._manifest()
-        nb = int(m["n_buckets"])
-        sel = {int(b) for b in buckets}
-        # closure, not plain residue match: this rewrite resolves-and-drops
-        # delta files, so a matched pre-split base must bring every finer
-        # stack it shares keys with (see _closure_split)
-        target, keep = _closure_split(m["files"], _bucket_zones(sel, nb), nb)
+        zones = _bucket_zones({int(b) for b in buckets}, int(m["n_buckets"]))
+        return self._fold_zones(m, zones, tombstone_horizon_lsn)
+
+    def _fold_zones(
+        self, m: dict, zones: _BucketZones, tombstone_horizon_lsn: int | None
+    ) -> CommitInfo:
+        """The one tail of bucket-scoped maintenance: rewrite every file
+        sharing keys with ``zones`` as resolved rows re-clustered at the
+        current modulus (migrating any pre-split file it touches), GC
+        tombstones at/below the horizon, and commit with no ledger entry.
+        The fold is CLOSED under key-sharing (``_closure_split``): it
+        resolves and drops delta files, so a matched pre-split base brings
+        every finer stack it shares keys with."""
+        target, keep = _closure_split(m["files"], zones, int(m["n_buckets"]))
         if not target:
             return CommitInfo(m["snapshot_id"], None, 0, skipped=True)
         df = _gc_tombstones(

@@ -75,10 +75,6 @@ def test_blooms_prune_zone_blind_files(spark, tmp_path):
             F.lit(b + 1).alias("lsn"),
         )
         t.merge(upd, batch_id=b)
-    t.build_key_blooms()
-    m = t._manifest(refresh=True)
-    files = [fe for fe in m["files"] if int(fe.get("rows", 0)) > 0]
-    assert all("bloom" in fe for fe in files)
     # k3 lives in base + the b=1 delta (3 % 3 == 0) only
     probe_rows = spark.createDataFrame([("k3",)], "doc_id string").select(
         F.xxhash64("doc_id").alias("h1"),
@@ -86,6 +82,20 @@ def test_blooms_prune_zone_blind_files(spark, tmp_path):
     ).collect()
     mask = (1 << 64) - 1
     probes = [(probe_rows[0]["h1"] & mask, probe_rows[0]["h2"] & mask)]
+    # no key index at all before the build (data files carry no parquet
+    # bloom): every zone-blind file is kept and read, and the lookup is
+    # still exact
+    assert {r["doc_id"]: r["val"] for r in t.lookup(["k3"]).collect()} == {
+        "k3": 1003
+    }
+    files = [
+        fe for fe in t._manifest(refresh=True)["files"] if int(fe.get("rows", 0)) > 0
+    ]
+    assert t._prune_files_by_key(files, ["k3"], probes) == files
+    t.build_key_blooms()
+    m = t._manifest(refresh=True)
+    files = [fe for fe in m["files"] if int(fe.get("rows", 0)) > 0]
+    assert all("bloom" in fe for fe in files)
     kept = t._prune_files_by_key(files, ["k3"], probes)
     assert len(kept) < len(files), "bloom pruned nothing"
     # exactness: the winner version still comes back

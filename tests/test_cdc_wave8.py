@@ -232,29 +232,38 @@ def test_lww_patch_with_deletes_matches_sequential_replay(spark):
             assert out[k][1] == lsn_, k
 
 
-def test_key_bloom_filter_written(spark, tmp_path):
-    # pyarrow 16 doesn't expose bloom_filter_offset, so prove the bloom
-    # filter's presence behaviorally: rewrite the exact same rows WITHOUT
-    # the bloom options and assert the table's file carries the extra
-    # bytes (ndv=50000 split-block bloom is tens of KB; the 100-row data
-    # itself is a few KB — the gap is unambiguous).
-    t = mk_table(spark, str(tmp_path / "t"))
-    t.append(
-        spark.createDataFrame([(f"k{i}", float(i), "s") for i in range(100)], SCHEMA),
-        batch_id=0,
-        assume_unique=True,
+def test_data_files_carry_no_fixed_size_index(spark, tmp_path):
+    """Data files carry no key index of their own (the sidecar blooms of
+    ``build_key_blooms`` are the table's one): an ``append`` base file, a
+    MoR delta and a CoW change file each stay within 4 KB of the same rows
+    rewritten by a plain parquet write. A parquet bloom sized for 50k keys
+    made every file ~64 KB larger, whatever its row count."""
+    rows = spark.createDataFrame(
+        [(f"k{i}", float(i), "s") for i in range(100)], SCHEMA
     )
-    fe = t._manifest()["files"][0]
-    f = os.path.join(t.path, fe["path"])
-    rows = spark.read.parquet(f)
-    nobloom_dir = str(tmp_path / "nobloom")
-    rows.coalesce(1).write.mode("overwrite").parquet(nobloom_dir)
-    nobloom = max(
-        os.path.getsize(os.path.join(nobloom_dir, p))
-        for p in os.listdir(nobloom_dir)
-        if p.endswith(".parquet")
-    )
-    assert os.path.getsize(f) > nobloom + 15_000, (os.path.getsize(f), nobloom)
+    upd = chg(spark, [(f"k{i}", "U", 10, -1.0, "t") for i in range(0, 100, 7)])
+    written = {}  # name -> data file path
+    for mode in ("cow", "mor"):
+        t = mk_table(spark, str(tmp_path / mode), merge_mode=mode)
+        t.append(rows, batch_id=0, assume_unique=True)
+        base = t._manifest()["files"][0]
+        t.merge(upd, batch_id=1)
+        m = t._manifest(refresh=True)
+        if mode == "cow":
+            written["base"] = os.path.join(t.path, base["path"])
+            written["change"] = os.path.join(t.path, m["changes"][0]["path"])
+        else:
+            delta = next(fe for fe in m["files"] if fe.get("kind") == "delta")
+            written["delta"] = os.path.join(t.path, delta["path"])
+    for name, f in written.items():
+        plain_dir = str(tmp_path / f"plain-{name}")
+        spark.read.parquet(f).coalesce(1).write.mode("overwrite").parquet(plain_dir)
+        plain = sum(
+            os.path.getsize(os.path.join(plain_dir, p))
+            for p in os.listdir(plain_dir)
+            if p.endswith(".parquet")
+        )
+        assert abs(os.path.getsize(f) - plain) <= 4096, (name, os.path.getsize(f), plain)
 
 
 # --- X101 row lineage -------------------------------------------------------

@@ -845,3 +845,17 @@ def test_one_data_file_scan_and_no_manifest_swap():
         (table, "_write_manifest"),
     }
     assert "_read_files_of" not in src
+
+
+def test_data_files_carry_no_parquet_bloom():
+    """The table's one key-membership index is the per-file sidecar
+    blooms of ``build_key_blooms``: no writer in the package asks parquet
+    for a bloom filter of its own, so a fixed-size per-file index cannot
+    come back without changing this test."""
+    import pathlib
+
+    from rap_etl_spark import lake
+
+    pkg = pathlib.Path(lake.__file__).parent
+    for py in pkg.rglob("*.py"):
+        assert "parquet.bloom" not in py.read_text(), py
